@@ -38,8 +38,8 @@ class SnapshotSettings:
     mysql_schema_history: str | None = None  # schema-history table (mysql.table path)
     hbase_schema: list[str] = field(default_factory=list)
     type_mode: str = "compat"              # 'compat' | 'strict' (see functions.mysql_types)
-    source_format: str = "parquet"         # 'parquet' | 'changelog' (region-split
-    #                                        Python data source, the HBase-scan shape)
+    source_format: str = "parquet"         # 'parquet' | 'changelog' (a directory of
+    #                                        region files, the HBase-scan shape)
 
     def __post_init__(self) -> None:
         if bool(self.mysql_schema_history) == bool(self.hbase_schema):

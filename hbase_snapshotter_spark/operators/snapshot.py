@@ -66,7 +66,7 @@ def decode_expr(col: Column, dtype: DataType, *, strict: bool = False) -> Column
     if isinstance(dtype, TimestampType):
         decoded = F.timestamp_millis(cast(non_null, "long"))
     elif isinstance(dtype, DateType):
-        decoded = F.try_to_date(non_null, F.lit("yyyy-MM-dd")) if not strict \
+        decoded = F.try_to_date(non_null, "yyyy-MM-dd") if not strict \
             else F.to_date(non_null, "yyyy-MM-dd")
     else:
         decoded = cast(non_null, dtype)

@@ -5,9 +5,14 @@ Reference stages → this function:
 
 1. config load + strategy dispatch (``Settings``)   → ``SnapshotSettings``
 2. schema resolution (explicit or as-of)            → ``settings.resolve_schema``
-3. scan definition + time range                     → declarative filter in
-4. distributed read                                 →   ``snapshot_as_of``
-5. typed decode                                     →   (same DAG)
+3. scan definition + time range                     → ``cell_ts <= T`` filter in
+                                                      ``snapshot_as_of``, pushed
+                                                      into the Parquet scan
+4. distributed read                                 → Spark's native Parquet scan:
+                                                      ``read_changelog``, or
+                                                      ``read_regions`` (regions
+                                                      pruned by footer stats)
+5. typed decode                                     → ``snapshot_as_of``
 6. Hive write (SaveMode.Overwrite)                  → ``write_snapshot``
 
 Where the reference hand-stages 4 jobs, here the whole thing is one
@@ -21,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hbase_snapshotter_spark.config import SnapshotSettings
 from hbase_snapshotter_spark.operators.snapshot import snapshot_as_of
-from hbase_snapshotter_spark.sources.changelog import read_changelog
+from hbase_snapshotter_spark.sources.changelog import read_changelog, read_regions
 from hbase_snapshotter_spark.sources.warehouse import write_snapshot
 
 
@@ -37,18 +42,13 @@ def run_snapshot(
     warehouse table and return the written DataFrame.
 
     ``changelog``/``history`` default to reading ``settings.source_table``
-    / ``settings.mysql_schema_history`` as Parquet paths; pass DataFrames
-    directly to source from any connector.
+    / ``settings.mysql_schema_history`` as Parquet paths (a directory of
+    region files when ``source_format`` is ``"changelog"``); pass
+    DataFrames directly to source from any connector.
     """
     if changelog is None:
         if settings.source_format == "changelog":
-            # region-split Python data source — the HBase-scan-shaped
-            # input (partition per region, pushdown, region pruning)
-            from hbase_snapshotter_spark.sources import pyds
-
-            pyds.register(spark)
-            changelog = (spark.read.format("changelog")
-                         .option("path", settings.source_table).load())
+            changelog = read_regions(spark, settings.source_table, settings.timestamp)
         else:
             changelog = read_changelog(spark, settings.source_table)
     if history is None and settings.mysql_schema_history:

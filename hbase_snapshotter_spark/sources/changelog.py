@@ -13,14 +13,28 @@ on ``cell_ts`` (e.g. ``dt=yyyy-MM-dd``) so the snapshot's ``cell_ts <= ts``
 filter prunes whole partitions before any I/O; within files, Parquet
 row-group min/max statistics prune further.  Both happen automatically
 from the declarative filter — see ``operators.snapshot``.
+
+A change log split into **regions** (one Parquet file per HBase region
+store file or CDC chunk) is listed and pruned by :func:`select_regions`:
+a region whose footer statistics put every ``cell_ts`` outside the time
+range is never opened — the analogue of the reference not scanning a
+region at all.  :func:`read_regions` serves the snapshot job from the kept
+regions with Spark's native Parquet scan; ``sources.pyds`` applies the
+same rule in its Python data source.
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHANGELOG_COLUMNS = ("row_key", "family", "qualifier", "value", "cell_ts")
+CHANGELOG_DDL = (
+    "row_key string, family string, qualifier string, value string, cell_ts long"
+)
 
 
 def read_table(
@@ -75,6 +89,59 @@ def read_changelog(spark: SparkSession, path: str) -> DataFrame:
     if missing:
         raise ValueError(f"change log at {path} missing columns {sorted(missing)}")
     return df
+
+
+def region_files(path: str) -> list[str]:
+    """The region files of a region-split change log, sorted: a
+    directory's ``*.parquet`` files, or else the files ``path`` matches
+    as a glob.  Empty when nothing matches."""
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return sorted(glob.glob(path))
+
+
+def _region_overlaps(path: str, lo: float, hi: float) -> bool:
+    """Whether region ``path`` may hold a cell with ``lo <= cell_ts <= hi``,
+    from its Parquet footer alone.  A region without complete ``cell_ts``
+    statistics is kept.  Raises ``ValueError`` naming the file when a
+    change-log column is missing: an explicit read schema would otherwise
+    fill it with NULL and drop the region's cells without an error."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    names = [meta.schema.column(i).name for i in range(meta.num_columns)]
+    missing = set(CHANGELOG_COLUMNS) - set(names)
+    if missing:
+        raise ValueError(f"change-log region {path} missing columns {sorted(missing)}")
+    idx = names.index("cell_ts")
+    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
+    if not stats or any(st is None or st.min is None for st in stats):
+        return True
+    return min(st.min for st in stats) <= hi and max(st.max for st in stats) >= lo
+
+
+def select_regions(
+    path: str, lo: float = float("-inf"), hi: float = float("inf")
+) -> tuple[list[str], list[str]]:
+    """List the region files under ``path`` and prune them to the time
+    range ``[lo, hi]`` by footer statistics.  Returns ``(all, kept)``;
+    raises ``FileNotFoundError`` when ``path`` holds no region file."""
+    files = region_files(path)
+    if not files:
+        raise FileNotFoundError(f"no region files under {path}")
+    return files, [f for f in files if _region_overlaps(f, lo, hi)]
+
+
+def read_regions(spark: SparkSession, path: str, ts: int | None = None) -> DataFrame:
+    """The change log as of ``ts`` from a directory (or glob) of region
+    files: regions that hold no cell at or before ``ts`` are pruned on
+    the driver, and the kept ones are read with Spark's native Parquet
+    scan, where the snapshot's ``cell_ts <= ts`` filter reaches the row
+    groups.  ``ts`` < 0 / ``None`` = "now" (no pruning)."""
+    hi = float("inf") if ts is None or ts < 0 else ts
+    _, kept = select_regions(path, hi=hi)
+    # with an explicit schema, no paths reads as an empty change log
+    return spark.read.schema(CHANGELOG_DDL).parquet(*kept)
 
 
 def events_as_changelog(events: DataFrame, *, as_of_ms: int | None = None) -> DataFrame:

@@ -2,6 +2,15 @@
 change-log schema from region-split storage — the architectural stand-in
 for the reference's distributed HBase scan.
 
+The snapshot job (``pipeline.run_snapshot`` with ``format: "changelog"``)
+does not read through this source: it prunes regions with the same rule
+(``sources.changelog.select_regions``) and reads the kept ones with
+Spark's native Parquet scan (``sources.changelog.read_regions``), so no
+Python runs on its data path.  What still reads through here is the
+public ``spark.read.format("changelog")`` source and the streaming tail
+(``spark.readStream.format("changelog")``), which feeds
+``streaming.snapshot_stream``.
+
 The reference reads its KV table with ``hbaseContext.hbaseRDD`` — one
 Spark partition per HBase region, server-side time-range and column
 filters (``HBaseSnapshotter.scala:123-129``).  No HBase exists in this
@@ -11,13 +20,14 @@ against pluggable region files:
 - **partition-per-region**: every file under ``path`` is one "region"
   (an HBase region's store file); ``partitions()`` emits one
   ``InputPartition`` per region, so scan parallelism = region count,
-  exactly like the reference's RDD.
+  exactly like the reference's RDD.  Files are listed by
+  ``sources.changelog.region_files``.
 - **time-range pushdown** (``Scan.setTimeRange``): comparison filters on
   ``cell_ts`` arrive via ``pushFilters`` and are (a) applied
   region-side through pyarrow dataset predicates (row-group min/max
   pruning inside each file) and (b) used to SKIP whole regions whose
   ``cell_ts`` range is disjoint — the analogue of not scanning a region
-  at all.
+  at all (``sources.changelog.select_regions``).
 - **column filters** (``Scan.addColumn``): equality/IN filters on
   ``family``/``qualifier``/``row_key`` are likewise applied
   region-side.
@@ -39,7 +49,6 @@ the pushed time range) — the Spark-facing surface stays byte-identical.
 
 from __future__ import annotations
 
-import glob
 import os
 from dataclasses import dataclass
 from typing import Iterable, Iterator
@@ -60,8 +69,11 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-CHANGELOG_DDL = (
-    "row_key string, family string, qualifier string, value string, cell_ts long"
+from hbase_snapshotter_spark.sources.changelog import (
+    CHANGELOG_COLUMNS,
+    CHANGELOG_DDL,
+    region_files,
+    select_regions,
 )
 
 _PUSHABLE_COLS = {"row_key", "family", "qualifier", "cell_ts"}
@@ -144,41 +156,13 @@ class ChangelogReader(DataSourceReader):
             else:
                 yield f
 
-    def _region_files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            files = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
-        else:
-            files = sorted(glob.glob(self.path))
-        if not files:
-            raise FileNotFoundError(f"no region files under {self.path}")
-        return files
-
     def partitions(self) -> list[RegionPartition]:
         """One partition per region file; regions whose cell_ts min/max
         (parquet footer stats) are disjoint from the pushed time range
         are skipped entirely — the 'don't scan that region' analogue."""
-        import pyarrow.parquet as pq
-
         lo, hi = _ts_bounds(self.accepted)
-        files = self._region_files()
-        parts: list[RegionPartition] = []
-        for path in files:
-            if lo != float("-inf") or hi != float("inf"):
-                meta = pq.ParquetFile(path).metadata
-                idx = {meta.schema.column(i).name: i
-                       for i in range(meta.num_columns)}.get("cell_ts")
-                if idx is not None:
-                    mins, maxs = [], []
-                    for rg in range(meta.num_row_groups):
-                        st = meta.row_group(rg).column(idx).statistics
-                        if st is None or st.min is None:
-                            mins, maxs = [], []
-                            break
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                    if mins and (min(mins) > hi or max(maxs) < lo):
-                        continue  # region disjoint from time range
-            parts.append(RegionPartition(path))
+        files, kept = select_regions(self.path, lo, hi)
+        parts = [RegionPartition(path) for path in kept]
         if self.debug_log:
             import json
 
@@ -196,7 +180,7 @@ class ChangelogReader(DataSourceReader):
         dataset = pds.dataset(partition.path, format="parquet")
         table = dataset.to_table(
             filter=_to_arrow_expr(self.accepted),
-            columns=["row_key", "family", "qualifier", "value", "cell_ts"],
+            columns=list(CHANGELOG_COLUMNS),
         )
         yield from table.to_batches()
 
@@ -230,11 +214,6 @@ class ChangelogStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"seen": []}
 
-    def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(glob.glob(os.path.join(self.path, "*.parquet")))
-        return sorted(glob.glob(self.path))
-
     @staticmethod
     def _rows(files: list[str]):
         # a LIST ITERATOR, not a generator: the runner both pickles the
@@ -242,7 +221,7 @@ class ChangelogStreamReader(SimpleDataSourceStreamReader):
         # (a bare list fails); CPython list iterators do both
         import pyarrow.parquet as pq
 
-        cols = ["row_key", "family", "qualifier", "value", "cell_ts"]
+        cols = list(CHANGELOG_COLUMNS)
         out: list[tuple] = []
         for path in files:
             table = pq.read_table(path, columns=cols)
@@ -251,7 +230,7 @@ class ChangelogStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         seen = set(start.get("seen", []))
-        files = self._files()
+        files = region_files(self.path)
         new = [f for f in files if f not in seen]
         return self._rows(new), {"seen": files}
 
@@ -290,15 +269,10 @@ class ChangelogPartitionedStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"seen": []}
 
-    def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(glob.glob(os.path.join(self.path, "*.parquet")))
-        return sorted(glob.glob(self.path))
-
     def latestOffset(self) -> dict:
         # metadata-only listing; equal start/end offsets (same sorted
         # file list) make Spark skip planning an empty micro-batch
-        return {"seen": self._files()}
+        return {"seen": region_files(self.path)}
 
     def partitions(self, start: dict, end: dict) -> list[RegionPartition]:
         seen = set(start.get("seen", []))
@@ -313,10 +287,7 @@ class ChangelogPartitionedStreamReader(DataSourceStreamReader):
             marker = os.path.basename(partition.path) + ".read"
             with open(os.path.join(self.debug_dir, marker), "a") as fh:
                 fh.write(str(os.getpid()) + "\n")
-        table = pq.read_table(
-            partition.path,
-            columns=["row_key", "family", "qualifier", "value", "cell_ts"],
-        )
+        table = pq.read_table(partition.path, columns=list(CHANGELOG_COLUMNS))
         yield from table.to_batches()
 
     def commit(self, end: dict) -> None:

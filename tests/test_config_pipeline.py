@@ -2,14 +2,18 @@
 job (config → schema → snapshot → warehouse table), mirroring the
 reference's entry path (Settings.scala, HBaseSnapshotter.main)."""
 
+import datetime
 import json
+import os
+import re
 
 import pytest
 
 from hbase_snapshotter_spark.config import ConfigError, SnapshotSettings
 from hbase_snapshotter_spark.pipeline import run_snapshot
-from hbase_snapshotter_spark.plans.schema import KEY_COLUMN
-from tests.conftest import T2
+from hbase_snapshotter_spark.plans.schema import KEY_COLUMN, explicit_schema
+from hbase_snapshotter_spark.sources.changelog import CHANGELOG_COLUMNS, read_regions
+from tests.conftest import CHANGELOG_ROWS, T1, T2
 
 
 def test_from_json_mysql_shape(tmp_path):
@@ -92,8 +96,8 @@ def test_cli_main_end_to_end(spark, changelog, schema_history, tmp_path):
 
 
 def test_run_snapshot_via_changelog_source(spark, changelog, schema_history, tmp_path):
-    """format='changelog' in the config routes the pipeline through the
-    region-split Python data source; the written table matches the
+    """format='changelog' in the config reads the change log from a
+    directory of region files; the written table matches the
     parquet-path run exactly."""
     import glob
     import os
@@ -121,6 +125,140 @@ def test_run_snapshot_via_changelog_source(spark, changelog, schema_history, tmp
     finally:
         spark.sql("DROP TABLE IF EXISTS snap_pyds")
         spark.sql("DROP TABLE IF EXISTS snap_plain")
+
+
+def write_regions(path, rows_per_region):
+    """Write each list of change-log rows as one region file; returns
+    ``{file name: smallest cell_ts}``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([(c, pa.int64() if c == "cell_ts" else pa.string())
+                        for c in CHANGELOG_COLUMNS])
+    os.makedirs(path, exist_ok=True)
+    mins = {}
+    for i, rows in enumerate(rows_per_region):
+        name = f"region-{i:03d}.parquet"
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(CHANGELOG_COLUMNS, r)) for r in rows], schema),
+            os.path.join(path, name))
+        mins[name] = min(r[-1] for r in rows)
+    return mins
+
+
+@pytest.fixture
+def time_regions(tmp_path):
+    """The change log in 5 time-ordered regions of 4 cells; at T1 the
+    last two regions start after T and the third is cut by it."""
+    rows = sorted(CHANGELOG_ROWS, key=lambda r: r[-1])
+    path = str(tmp_path / "time_regions")
+    mins = write_regions(path, [rows[i:i + 4] for i in range(0, len(rows), 4)])
+    return path, mins
+
+
+def region_settings(path, sink, ts, **kw):
+    kw.setdefault("mysql_schema_history", "inline")
+    return SnapshotSettings(source_table=path, sink_table=sink, timestamp=ts,
+                            source_format="changelog", **kw)
+
+
+def test_region_read_prunes_regions_after_t(spark, changelog, schema_history, time_regions):
+    """Regions whose smallest cell_ts is after T are left out of the
+    native read, and the written table equals the parquet-path run."""
+    path, mins = time_regions
+    read = {os.path.basename(f) for f in read_regions(spark, path, T1).inputFiles()}
+    want = {name for name, lo in mins.items() if lo <= T1}
+    assert read == want and len(want) == 3 and len(mins) == 5
+
+    try:
+        run_snapshot(spark, region_settings(path, "snap_regions", T1), history=schema_history)
+        run_snapshot(spark, SnapshotSettings(
+            source_table="unused", sink_table="snap_regions_plain", timestamp=T1,
+            mysql_schema_history="inline"), changelog=changelog, history=schema_history)
+        got = spark.table("snap_regions")
+        plain = spark.table("snap_regions_plain")
+        assert got.columns == plain.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
+        assert got.count() == 2  # r1, r2; r3 is first written after T1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_regions")
+        spark.sql("DROP TABLE IF EXISTS snap_regions_plain")
+
+
+def test_region_read_all_pruned_writes_empty_table(spark, time_regions):
+    """T before every region: nothing is scanned and the job writes an
+    empty table with the schema's columns."""
+    path, _ = time_regions
+    fields = ["d:name", "d:amount:double"]
+    settings = region_settings(path, "snap_before", 100, mysql_schema_history=None,
+                               hbase_schema=fields)
+    try:
+        run_snapshot(spark, settings)
+        table = spark.table("snap_before")
+        assert table.columns == explicit_schema(fields).fieldNames()
+        assert table.count() == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_before")
+
+
+def test_region_missing_column_is_an_error(spark, schema_history, tmp_path):
+    """A region without one of the change-log columns fails the job with
+    its file name, instead of reading the column as NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "regions")
+    write_regions(path, [CHANGELOG_ROWS[:4]])
+    bad = os.path.join(path, "region-001.parquet")
+    pq.write_table(pa.table({"row_key": ["r9"], "family": ["d"],
+                             "qualifier": ["name"], "cell_ts": [700]}), bad)
+    with pytest.raises(ValueError, match=re.escape(bad) + r".*'value'"):
+        run_snapshot(spark, region_settings(path, "snap_bad", T2), history=schema_history)
+    with pytest.raises(FileNotFoundError):
+        read_regions(spark, str(tmp_path / "empty"), T2)
+
+
+def test_region_read_plan_is_native_parquet(spark, schema_history, time_regions):
+    """The job's plan scans the regions with Spark's Parquet reader, the
+    time range pushed into it, and has no Python node."""
+    path, _ = time_regions
+    try:
+        out = run_snapshot(spark, region_settings(path, "snap_plan", T1),
+                           history=schema_history)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_plan")
+    assert "FileScan parquet" in plan
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)", plan)  # may be cut with "..."
+    assert any("cell_ts" in p for p in pushed), plan
+    for node in ("BatchScan", "Python", "ArrowEval", "Pandas"):
+        assert node not in plan, node
+
+
+def test_run_snapshot_strict_decodes_date_column(spark):
+    """type_mode='strict' maps a MySQL date column to DateType, and the
+    job decodes it (the lenient date decode builds and runs)."""
+    doc = {"t": {"columnIndexToNameMap": {"0": "day"},
+                 "columnsSchema": {"day": {"columnType": "date"}}}}
+    history = spark.createDataFrame(
+        [("initial-snapshot", 100, json.dumps(doc))],
+        "change_key string, cell_ts long, schema_json string")
+    log = spark.createDataFrame(
+        [("r1", "d", "row_status", "I", 500), ("r1", "d", "day", "2020-01-02", 500),
+         ("r2", "d", "row_status", "I", 600), ("r2", "d", "day", "NULL", 600),
+         ("r3", "d", "row_status", "I", 700), ("r3", "d", "day", "bad", 700)],
+        "row_key string, family string, qualifier string, value string, cell_ts long")
+    settings = SnapshotSettings(source_table="unused", sink_table="snap_strict_date",
+                                timestamp=T2, mysql_schema_history="inline",
+                                type_mode="strict")
+    try:
+        run_snapshot(spark, settings, changelog=log, history=history)
+        table = spark.table("snap_strict_date")
+        assert dict(table.dtypes)["day"] == "date"
+        assert {r[KEY_COLUMN]: r["day"] for r in table.collect()} == \
+            {"r1": datetime.date(2020, 1, 2), "r2": None, "r3": None}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_strict_date")
 
 
 def test_config_rejects_unknown_source_format():

@@ -160,6 +160,22 @@ def test_strict_decode_fails_on_malformed(spark, schema_history):
         snapshot_as_of(bad, schema, T0, strict_decode=True).collect()
 
 
+def test_lenient_date_decode(spark):
+    """Dates decode from ``yyyy-MM-dd``; the NULL sentinel and malformed
+    values decode to NULL."""
+    import datetime
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DateType
+
+    from hbase_snapshotter_spark.operators.snapshot import decode_expr
+
+    df = spark.createDataFrame([("2020-01-02",), ("NULL",), ("bad",)], "v string")
+    got = {r.v: r.d for r in df.select("v", decode_expr(F.col("v"), DateType()).alias("d"))
+           .collect()}
+    assert got == {"2020-01-02": datetime.date(2020, 1, 2), "NULL": None, "bad": None}
+
+
 def test_empty_schema_raises_clear_error(spark, changelog):
     """A schema binding no cells must fail with a meaningful message,
     not a TypeError from filter(None)."""
