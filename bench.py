@@ -197,28 +197,8 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
 
-    from hbase_snapshotter_spark.queries.registry import (
-        SESSION_DEFAULTS,
-        QUERIES as _REGISTRY,
-    )
-
-    # r10: lanes folded into union suites keep their module functions
-    # but lose their registry key — the bench keeps timing the LANE so
-    # every per-query number stays comparable round-over-round (the
-    # suites are pure NULL-padded unions of these timed lanes, no
-    # extra compute of their own).
-    class _LaneResolver(dict):
-        def __missing__(self, name):
-            import hbase_snapshotter_spark.queries.llm as llm
-            import hbase_snapshotter_spark.queries.relational as rel
-            import hbase_snapshotter_spark.queries.streaming_q as stq
-            for mod in (llm, stq, rel):
-                fn = getattr(mod, name, None)
-                if callable(fn):
-                    return fn
-            raise KeyError(name)
-
-    QUERIES = _LaneResolver(_REGISTRY)
+    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
+    from hbase_snapshotter_spark.testing import resolve
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -292,12 +272,13 @@ def main() -> int:
         # in Janino on first use) so the timed passes measure
         # steady-state execution, not JIT compilation.
         for name in section:
-            QUERIES[name](spark, warm_dir).write.mode("overwrite") \
+            resolve(name)(spark, warm_dir).write.mode("overwrite") \
                 .format("noop").save()
         release_caches(keep_shared=True)
         for _pass in range(PASSES):
             for name in section:
-                fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
+                query = resolve(name)
+                fn = getattr(query, "__wrapped__", query)
                 best = float("inf")
                 best_cpu = float("inf")
                 for _ in range(REPS):

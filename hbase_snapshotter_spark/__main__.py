@@ -28,8 +28,10 @@ def main(argv: list[str]) -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
-    out = run_snapshot(spark, settings)
-    print(f"snapshot written to {settings.sink_table}: {out.count()} rows")
+    run_snapshot(spark, settings)
+    # count the written table: the returned plan would re-run the whole job
+    rows = spark.table(settings.sink_table).count()
+    print(f"snapshot written to {settings.sink_table}: {rows} rows")
     return 0
 
 

@@ -38,8 +38,6 @@ class SnapshotSettings:
     mysql_schema_history: str | None = None  # schema-history table (mysql.table path)
     hbase_schema: list[str] = field(default_factory=list)
     type_mode: str = "compat"              # 'compat' | 'strict' (see functions.mysql_types)
-    source_format: str = "parquet"         # 'parquet' | 'changelog' (a directory of
-    #                                        region files, the HBase-scan shape)
 
     def __post_init__(self) -> None:
         if bool(self.mysql_schema_history) == bool(self.hbase_schema):
@@ -48,12 +46,11 @@ class SnapshotSettings:
             )
         if self.type_mode not in ("compat", "strict"):
             raise ConfigError(f"unknown type_mode {self.type_mode!r}")
-        if self.source_format not in ("parquet", "changelog"):
-            raise ConfigError(f"unknown source_format {self.source_format!r}")
 
     @classmethod
     def from_json(cls, path_or_str: str | Path) -> "SnapshotSettings":
-        """Load from a JSON config file or literal JSON string.
+        """Load from a JSON config file, or from literal JSON: a string
+        whose first non-blank character is ``{``.
 
         Accepts the reference's config layout
         (``conf/application-{mysql,hbase}-example.json``)::
@@ -62,10 +59,12 @@ class SnapshotSettings:
                        "schema": [...]},
              "mysql": {"table": ...},
              "hive":  {"table": ...}}
+
+        ``hbase.zookeeper_quorum`` and ``hbase.format`` are ignored: the
+        change log is always read as region files (``read_regions``).
         """
-        p = Path(path_or_str)
-        raw = p.read_text() if p.exists() else str(path_or_str)
-        doc = json.loads(raw)
+        literal = isinstance(path_or_str, str) and path_or_str.lstrip().startswith("{")
+        doc = json.loads(path_or_str if literal else Path(path_or_str).read_text())
         hbase = doc.get("hbase", {})
         if "table" not in hbase or "table" not in doc.get("hive", {}):
             raise ConfigError("config requires hbase.table and hive.table")
@@ -76,7 +75,6 @@ class SnapshotSettings:
             mysql_schema_history=doc.get("mysql", {}).get("table"),
             hbase_schema=list(hbase.get("schema", [])),
             type_mode=doc.get("type_mode", "compat"),
-            source_format=hbase.get("format", "parquet"),
         )
 
     def resolve_schema(self, history: DataFrame | None = None) -> StructType:

@@ -233,20 +233,17 @@ def snapshot_as_of(
     schema: StructType,
     ts: int | None = None,
     *,
-    row_key_col: str = "row_key",
-    family_col: str = "family",
-    qualifier_col: str = "qualifier",
-    value_col: str = "value",
-    ts_col: str = "cell_ts",
     strict_decode: bool = False,
 ) -> DataFrame:
     """Materialize the typed table as it existed at ``ts``.
 
-    ``schema`` is the snapshot ``StructType`` with per-field cell bindings
-    in metadata (from ``plans.schema``).  Columns present in the schema
-    but absent from the log resolve to NULL; cells in the log but not in
-    the schema (columns added after ts) are simply not pivoted — schema
-    drift both ways is handled.
+    ``changelog`` has the change-log columns ``(row_key, family,
+    qualifier, value, cell_ts)``; ``schema`` is the snapshot
+    ``StructType`` with per-field cell bindings in metadata (from
+    ``plans.schema``).  Columns present in the schema but absent from
+    the log resolve to NULL; cells in the log but not in the schema
+    (columns added after ts) are simply not pivoted — schema drift both
+    ways is handled.
 
     Two-stage aggregation, both with map-side partials:
 
@@ -273,7 +270,7 @@ def snapshot_as_of(
             .append(f.metadata["qualifier"])
     keep = None
     for fam, quals in fam_quals.items():
-        cond = (F.col(family_col) == fam) & F.col(qualifier_col).isin(quals)
+        cond = (F.col("family") == fam) & F.col("qualifier").isin(quals)
         keep = cond if keep is None else (keep | cond)
     if keep is None:
         raise ValueError(
@@ -282,23 +279,22 @@ def snapshot_as_of(
             "only) — nothing to snapshot")
 
     latest = (
-        as_of(changelog, ts, ts_col=ts_col)
+        as_of(changelog, ts)
         .filter(keep)
-        .groupBy(F.col(row_key_col), F.col(family_col), F.col(qualifier_col))
-        .agg(F.max(F.struct(F.col(ts_col), F.col(value_col))).alias("__latest"))
+        .groupBy("row_key", "family", "qualifier")
+        .agg(F.max(F.struct("cell_ts", "value")).alias("__latest"))
     )
     pivoted = (
-        latest.withColumn(
-            "__cell", F.concat_ws(":", F.col(family_col), F.col(qualifier_col)))
-        .groupBy(F.col(row_key_col))
+        latest.withColumn("__cell", F.concat_ws(":", "family", "qualifier"))
+        .groupBy("row_key")
         .pivot("__cell", list(dict.fromkeys(cells)))
-        .agg(F.first(F.col(f"__latest.{value_col}")))
+        .agg(F.first("__latest.value"))
     )
 
     out: list[Column] = []
     for f in schema.fields:
         if f.metadata.get("key"):
-            out.append(F.col(row_key_col).alias(KEY_COLUMN))
+            out.append(F.col("row_key").alias(KEY_COLUMN))
             continue
         cell = f"{f.metadata.get('family', DEFAULT_FAMILY)}:{f.metadata['qualifier']}"
         raw = F.col(f"`{cell}`")

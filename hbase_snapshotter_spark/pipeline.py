@@ -8,10 +8,11 @@ Reference stages → this function:
 3. scan definition + time range                     → ``cell_ts <= T`` filter in
                                                       ``snapshot_as_of``, pushed
                                                       into the Parquet scan
-4. distributed read                                 → Spark's native Parquet scan:
-                                                      ``read_changelog``, or
-                                                      ``read_regions`` (regions
-                                                      pruned by footer stats)
+4. distributed read                                 → ``read_regions``: region
+                                                      files pruned by footer
+                                                      stats, the kept ones read
+                                                      by Spark's native Parquet
+                                                      scan
 5. typed decode                                     → ``snapshot_as_of``
 6. Hive write (SaveMode.Overwrite)                  → ``write_snapshot``
 
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hbase_snapshotter_spark.config import SnapshotSettings
 from hbase_snapshotter_spark.operators.snapshot import snapshot_as_of
-from hbase_snapshotter_spark.sources.changelog import read_changelog, read_regions
+from hbase_snapshotter_spark.sources.changelog import read_regions
 from hbase_snapshotter_spark.sources.warehouse import write_snapshot
 
 
@@ -36,25 +37,22 @@ def run_snapshot(
     *,
     changelog: DataFrame | None = None,
     history: DataFrame | None = None,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Materialize the snapshot described by ``settings`` into the
     warehouse table and return the written DataFrame.
 
-    ``changelog``/``history`` default to reading ``settings.source_table``
-    / ``settings.mysql_schema_history`` as Parquet paths (a directory of
-    region files when ``source_format`` is ``"changelog"``); pass
-    DataFrames directly to source from any connector.
+    ``changelog`` defaults to the region files under
+    ``settings.source_table`` (a directory, at any depth, or a glob; see
+    ``read_regions``), and ``history`` to the Parquet table at
+    ``settings.mysql_schema_history``; pass DataFrames directly to
+    source from any connector.
     """
     if changelog is None:
-        if settings.source_format == "changelog":
-            changelog = read_regions(spark, settings.source_table, settings.timestamp)
-        else:
-            changelog = read_changelog(spark, settings.source_table)
+        changelog = read_regions(spark, settings.source_table, settings.timestamp)
     if history is None and settings.mysql_schema_history:
         history = spark.read.parquet(settings.mysql_schema_history)
 
     schema = settings.resolve_schema(history)
     snapshot = snapshot_as_of(changelog, schema, settings.timestamp)
-    write_snapshot(snapshot, settings.sink_table, partition_by=partition_by)
+    write_snapshot(snapshot, settings.sink_table)
     return snapshot

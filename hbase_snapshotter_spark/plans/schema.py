@@ -154,70 +154,46 @@ def transform_schema(schema_json: str, *, mode: str = "compat") -> StructType:
     return StructType(fields)
 
 
-def history_order_key(key_col: str = "change_key"):
-    """Column expression ordering schema-history keys: the literal
-    ``"initial-snapshot"`` sorts as 0, every other key as its numeric
-    value (``Schema.scala:169-175``)."""
-    c = F.col(key_col)
+def history_order_key():
+    """Column expression ordering schema-history ``change_key`` values:
+    the literal ``"initial-snapshot"`` sorts as 0, every other key as its
+    numeric value (``Schema.scala:169-175``)."""
+    c = F.col("change_key")
     return F.when(c == INITIAL_SNAPSHOT_KEY, F.lit(0)).otherwise(c.cast("long"))
 
 
-def schema_as_of(
-    history: DataFrame,
-    ts: int | None,
-    *,
-    key_col: str = "change_key",
-    ts_col: str = "cell_ts",
-    json_col: str = "schema_json",
-    mode: str = "compat",
-) -> StructType:
+def schema_as_of(history: DataFrame, ts: int | None, *, mode: str = "compat") -> StructType:
     """Latest schema version at-or-before ``ts`` → ``StructType``.
 
-    One job replacing the reference's two-scan dance (``Schema.scala:
-    180-215``): time-range filter (Parquet-pushed) → ``TakeOrderedAndProject``
-    top-1 under :func:`history_order_key` → single-row driver collect.
-    ``ts`` < 0 or ``None`` means "now" (``Schema.scala:181``).
+    ``history`` is the schema-history log ``(change_key, cell_ts,
+    schema_json)``.  One job replacing the reference's two-scan dance
+    (``Schema.scala:180-215``): time-range filter (Parquet-pushed) →
+    ``TakeOrderedAndProject`` top-1 under :func:`history_order_key` →
+    single-row driver collect.  ``ts`` < 0 or ``None`` means "now"
+    (``Schema.scala:181``).
     """
-    return transform_schema(
-        schema_json_as_of(history, ts, key_col=key_col, ts_col=ts_col,
-                          json_col=json_col),
-        mode=mode)
+    return transform_schema(schema_json_as_of(history, ts), mode=mode)
 
 
-def schema_json_as_of(
-    history: DataFrame,
-    ts: int | None,
-    *,
-    key_col: str = "change_key",
-    ts_col: str = "cell_ts",
-    json_col: str = "schema_json",
-) -> str:
+def schema_json_as_of(history: DataFrame, ts: int | None) -> str:
     """The raw schema-dump JSON at-or-before ``ts`` — the
     :func:`schema_as_of` lookup without the StructType transform
     (shared by the as-of and diff lanes)."""
     df = history
     if ts is not None and ts >= 0:
-        df = df.filter(F.col(ts_col) <= F.lit(ts))
+        df = df.filter(F.col("cell_ts") <= F.lit(ts))
     rows = (
-        df.select(F.col(json_col), history_order_key(key_col).alias("__k"))
+        df.select(F.col("schema_json"), history_order_key().alias("__k"))
         .orderBy(F.desc("__k"))
         .limit(1)
         .collect()
     )
     if not rows:
         raise LookupError(f"no schema version at or before ts={ts}")
-    return rows[0][json_col]
+    return rows[0]["schema_json"]
 
 
-def schema_diff(
-    history: DataFrame,
-    ts_from: int | None,
-    ts_to: int | None,
-    *,
-    key_col: str = "change_key",
-    ts_col: str = "cell_ts",
-    json_col: str = "schema_json",
-) -> DataFrame:
+def schema_diff(history: DataFrame, ts_from: int | None, ts_to: int | None) -> DataFrame:
     """Schema EVOLUTION diff (N46): what changed between the schema
     as-of ``ts_from`` and as-of ``ts_to`` — one row per column seen in
     either version: ``(col_name, change, old_type, new_type,
@@ -242,10 +218,8 @@ def schema_diff(
         return {name: (int(idx), types[name]["columnType"])
                 for idx, name in idx_map.items()}
 
-    a = cols(schema_json_as_of(history, ts_from, key_col=key_col,
-                               ts_col=ts_col, json_col=json_col))
-    b = cols(schema_json_as_of(history, ts_to, key_col=key_col,
-                               ts_col=ts_col, json_col=json_col))
+    a = cols(schema_json_as_of(history, ts_from))
+    b = cols(schema_json_as_of(history, ts_to))
     rows = []
     for name in sorted(set(a) | set(b)):
         old = a.get(name)

@@ -8,19 +8,18 @@ tests/benchmarks, or from any DataSource (an hbase-spark connector, a
 Kafka CDC topic compacted to Parquet, …) in production.  Everything
 downstream only sees the DataFrame, so the source swaps freely.
 
-Scale notes: a production change log should be written date-partitioned
-on ``cell_ts`` (e.g. ``dt=yyyy-MM-dd``) so the snapshot's ``cell_ts <= ts``
-filter prunes whole partitions before any I/O; within files, Parquet
-row-group min/max statistics prune further.  Both happen automatically
-from the declarative filter — see ``operators.snapshot``.
-
-A change log split into **regions** (one Parquet file per HBase region
-store file or CDC chunk) is listed and pruned by :func:`select_regions`:
-a region whose footer statistics put every ``cell_ts`` outside the time
-range is never opened — the analogue of the reference not scanning a
-region at all.  :func:`read_regions` serves the snapshot job from the kept
-regions with Spark's native Parquet scan; ``sources.pyds`` applies the
-same rule in its Python data source.
+A change log on disk is a directory of Parquet **regions** (one file per
+HBase region store file or CDC chunk, at any depth, so a Spark
+``partitionBy("dt")`` layout reads as is).  :func:`select_regions` lists
+and prunes them: a region whose footer statistics put every ``cell_ts``
+outside the time range is never opened — the analogue of the reference
+not scanning a region at all.  Spark cannot derive a ``dt=`` partition
+value from a ``cell_ts`` predicate, so on a date-partitioned log it is
+these footer statistics, not partition pruning, that skip files.
+:func:`read_regions` serves the snapshot job from the kept regions with
+Spark's native Parquet scan, where the ``cell_ts <= ts`` filter also
+prunes row groups; ``sources.pyds`` applies the same rule in its Python
+data source.
 """
 
 from __future__ import annotations
@@ -82,22 +81,17 @@ def read_table(
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def read_changelog(spark: SparkSession, path: str) -> DataFrame:
-    """Read a change-log table and validate its shape."""
-    df = spark.read.parquet(path)
-    missing = set(CHANGELOG_COLUMNS) - set(df.columns)
-    if missing:
-        raise ValueError(f"change log at {path} missing columns {sorted(missing)}")
-    return df
-
-
 def region_files(path: str) -> list[str]:
-    """The region files of a region-split change log, sorted: a
-    directory's ``*.parquet`` files, or else the files ``path`` matches
-    as a glob.  Empty when nothing matches."""
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return sorted(glob.glob(path))
+    """The region files of a region-split change log, sorted: every
+    ``*.parquet`` file under a directory, at any depth, or else the files
+    ``path`` matches as a glob.  Under a directory, a path part starting
+    with ``_`` or ``.`` is skipped, as Spark does (``_SUCCESS``,
+    ``.crc`` files, ``_temporary/``).  Empty when nothing matches."""
+    if not os.path.isdir(path):
+        return sorted(glob.glob(path))
+    found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    return sorted(f for f in found if not any(
+        part.startswith(("_", ".")) for part in os.path.relpath(f, path).split(os.sep)))
 
 
 def _region_overlaps(path: str, lo: float, hi: float) -> bool:
@@ -156,9 +150,9 @@ def events_as_changelog(events: DataFrame, *, as_of_ms: int | None = None) -> Da
     ``as_of_ms`` applies the snapshot time bound on the RAW ``ts`` column
     — ``cell_ts`` is a derived expression, so a filter on it cannot reach
     the Parquet scan; the equivalent raw-column predicate pushes down and
-    prunes row groups (and, on a date-partitioned log, whole partitions).
-    The downstream ``snapshot_as_of`` filter on ``cell_ts`` is then a
-    no-op re-check, keeping operator semantics source-independent.
+    prunes row groups.  The downstream ``snapshot_as_of`` filter on
+    ``cell_ts`` is then a no-op re-check, keeping operator semantics
+    source-independent.
     """
     if as_of_ms is not None and as_of_ms >= 0:
         # cell_ts floors ts to millis: cell_ts <= T  ⟺  ts < T+1ms

@@ -2,8 +2,8 @@
 change-log schema from region-split storage — the architectural stand-in
 for the reference's distributed HBase scan.
 
-The snapshot job (``pipeline.run_snapshot`` with ``format: "changelog"``)
-does not read through this source: it prunes regions with the same rule
+The snapshot job (``pipeline.run_snapshot``) does not read through this
+source: it prunes regions with the same rule
 (``sources.changelog.select_regions``) and reads the kept ones with
 Spark's native Parquet scan (``sources.changelog.read_regions``), so no
 Python runs on its data path.  What still reads through here is the

@@ -1,10 +1,10 @@
 """Warehouse sink — the reference's Hive write (S12).
 
 ``df.write.mode(Overwrite).saveAsTable`` (``HBaseSnapshotter.scala:
-134-137``) is already the idiomatic PySpark API; this wrapper adds the
-options that matter at 100 TB: explicit format, optional partitioning,
-and optional bucketing so repeated snapshot⋈snapshot / delta-merge joins
-co-locate without a shuffle.
+134-137``) is already the idiomatic PySpark API; this wrapper fixes the
+format to Parquet and adds the options that matter at 100 TB: optional
+partitioning, and optional bucketing so repeated snapshot⋈snapshot /
+delta-merge joins co-locate without a shuffle.
 """
 
 from __future__ import annotations
@@ -17,12 +17,10 @@ def write_snapshot(
     df: DataFrame,
     table: str,
     *,
-    format: str = "parquet",
     partition_by: list[str] | None = None,
     bucket_by: tuple[int, list[str]] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    writer = df.write.mode(mode).format(format)
+    writer = df.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if bucket_by:

@@ -1,6 +1,7 @@
 """Cross-engine comparison helpers shared by tools/oracle_check.py and
 the pytest suite: normalize values (float fuzz → 6 dp, timestamps →
-ISO), sort columns by name and rows lexicographically, fingerprint."""
+ISO), sort columns by name and rows lexicographically, fingerprint.
+Also :func:`resolve`, the query lookup the bench and the tools share."""
 
 from __future__ import annotations
 
@@ -94,3 +95,21 @@ def compare(scols, srows, ocols, orows) -> tuple[bool, str]:
         a, b = diffs[0]
         return False, f"{len(diffs)} differing rows; first: spark={a[:160]} oracle={b[:160]}"
     return True, "ok"
+
+
+def resolve(name: str):
+    """The query function named ``name``: its registry entry, else the
+    lane function of that name in ``queries.llm``/``streaming_q``/
+    ``relational`` (lanes folded into union suites keep their module
+    function but lose their registry key, and the bench still times
+    them).  Raises ``KeyError`` when neither exists."""
+    from hbase_snapshotter_spark.queries import llm, relational, streaming_q
+    from hbase_snapshotter_spark.queries.registry import QUERIES
+
+    if name in QUERIES:
+        return QUERIES[name]
+    for mod in (llm, streaming_q, relational):
+        fn = getattr(mod, name, None)
+        if callable(fn):
+            return fn
+    raise KeyError(name)

@@ -96,9 +96,8 @@ def test_cli_main_end_to_end(spark, changelog, schema_history, tmp_path):
 
 
 def test_run_snapshot_via_changelog_source(spark, changelog, schema_history, tmp_path):
-    """format='changelog' in the config reads the change log from a
-    directory of region files; the written table matches the
-    parquet-path run exactly."""
+    """The job reads the change log from a directory of region files;
+    the written table matches the DataFrame-sourced run exactly."""
     import glob
     import os
     import shutil
@@ -112,7 +111,7 @@ def test_run_snapshot_via_changelog_source(spark, changelog, schema_history, tmp
 
     settings = SnapshotSettings(
         source_table=regions, sink_table="snap_pyds", timestamp=T2,
-        mysql_schema_history="inline", source_format="changelog",
+        mysql_schema_history="inline",
     )
     try:
         out = run_snapshot(spark, settings, history=schema_history)
@@ -158,8 +157,7 @@ def time_regions(tmp_path):
 
 def region_settings(path, sink, ts, **kw):
     kw.setdefault("mysql_schema_history", "inline")
-    return SnapshotSettings(source_table=path, sink_table=sink, timestamp=ts,
-                            source_format="changelog", **kw)
+    return SnapshotSettings(source_table=path, sink_table=sink, timestamp=ts, **kw)
 
 
 def test_region_read_prunes_regions_after_t(spark, changelog, schema_history, time_regions):
@@ -261,11 +259,106 @@ def test_run_snapshot_strict_decodes_date_column(spark):
         spark.sql("DROP TABLE IF EXISTS snap_strict_date")
 
 
-def test_config_rejects_unknown_source_format():
-    import pytest as _pytest
 
-    from hbase_snapshotter_spark.config import ConfigError
+def test_from_json_long_literal():
+    """Literal JSON longer than a file name loads: it is parsed, never
+    probed as a path.  A missing config file is a FileNotFoundError."""
+    fields = [f"d:col{i:02d}:integer" for i in range(40)]
+    doc = json.dumps({"hbase": {"table": "t", "schema": fields}, "hive": {"table": "o"}})
+    assert len(doc) > 255 and "/" not in doc
+    assert SnapshotSettings.from_json(doc).hbase_schema == fields
+    assert SnapshotSettings.from_json("  \n" + doc).hbase_schema == fields
+    with pytest.raises(FileNotFoundError):
+        SnapshotSettings.from_json("no-such-config.json")
 
-    with _pytest.raises(ConfigError, match="source_format"):
-        SnapshotSettings(source_table="x", sink_table="y",
-                         hbase_schema=["d:a:string"], source_format="kafka")
+
+def test_cli_main_counts_the_written_table(spark, changelog, schema_history,
+                                           tmp_path, monkeypatch, capsys):
+    """main() reports the row count from the written table, not by
+    re-running the job: the source is gone once run_snapshot returns."""
+    import shutil
+
+    import hbase_snapshotter_spark.__main__ as cli
+
+    log_path = str(tmp_path / "changelog")
+    hist_path = str(tmp_path / "history")
+    changelog.write.parquet(log_path)
+    schema_history.write.parquet(hist_path)
+    cfg = tmp_path / "app.json"
+    cfg.write_text(json.dumps({
+        "hbase": {"table": log_path, "timestamp": T2},
+        "mysql": {"table": hist_path},
+        "hive": {"table": "cli_count"},
+    }))
+
+    def run_then_drop_source(*args, **kwargs):
+        out = run_snapshot(*args, **kwargs)
+        shutil.rmtree(log_path)
+        return out
+
+    monkeypatch.setattr(cli, "run_snapshot", run_then_drop_source)
+    try:
+        assert cli.main([str(cfg)]) == 0
+        assert "cli_count: 3 rows" in capsys.readouterr().out
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cli_count")
+
+
+def _run_config(spark, log_path, hist_path, sink, **hbase):
+    settings = SnapshotSettings.from_json(json.dumps({
+        "hbase": {"table": log_path, "timestamp": T2, **hbase},
+        "mysql": {"table": hist_path},
+        "hive": {"table": sink},
+    }))
+    run_snapshot(spark, settings)
+    return sorted(map(tuple, spark.table(sink).collect()))
+
+
+def test_partitioned_log_reads_like_flat_layout(spark, changelog, schema_history, tmp_path):
+    """A Spark-written partitionBy("dt") change log writes the same table
+    as the flat layout; _SUCCESS, .crc and _temporary/ files are never
+    read (a corrupt file under _temporary/ would fail the footer read)."""
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
+
+    flat = str(tmp_path / "flat")
+    nested = str(tmp_path / "nested")
+    hist_path = str(tmp_path / "history")
+    changelog.write.parquet(flat)
+    changelog.withColumn("dt", F.expr("date_add(DATE'2020-01-01', cast(cell_ts div 1000 as int))")) \
+        .write.partitionBy("dt").parquet(nested)
+    schema_history.write.parquet(hist_path)
+    os.makedirs(os.path.join(nested, "_temporary", "0"))
+    with open(os.path.join(nested, "_temporary", "0", "part-00000.parquet"), "w") as fh:
+        fh.write("not parquet")
+
+    parts = {os.path.join(root, f) for root, _, files in os.walk(nested)
+             if "_temporary" not in root for f in files if f.endswith(".parquet")}
+    assert len({os.path.dirname(f) for f in parts}) > 1
+    assert any(f.startswith(".") and f.endswith(".crc") for f in os.listdir(flat))
+    assert os.path.exists(os.path.join(nested, "_SUCCESS"))
+    read = {urlparse(f).path for f in read_regions(spark, nested, T2).inputFiles()}
+    assert read == parts
+
+    try:
+        want = _run_config(spark, flat, hist_path, "snap_flat")
+        assert len(want) == 3
+        assert _run_config(spark, nested, hist_path, "snap_nested") == want
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_flat")
+        spark.sql("DROP TABLE IF EXISTS snap_nested")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "changelog"])
+def test_config_format_key_is_ignored(spark, changelog, schema_history, tmp_path, fmt):
+    """Configs that still carry hbase.format load and run; the key is
+    ignored like zookeeper_quorum."""
+    log_path = str(tmp_path / "changelog")
+    hist_path = str(tmp_path / "history")
+    changelog.write.parquet(log_path)
+    schema_history.write.parquet(hist_path)
+    try:
+        assert len(_run_config(spark, log_path, hist_path, "snap_fmt", format=fmt)) == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_fmt")

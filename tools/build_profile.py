@@ -40,23 +40,8 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from hbase_snapshotter_spark.cache import release_caches
-    from hbase_snapshotter_spark.queries.registry import (
-        SESSION_DEFAULTS,
-        QUERIES as _REGISTRY,
-    )
-
-    class _LaneResolver(dict):
-        def __missing__(self, name):
-            import hbase_snapshotter_spark.queries.llm as llm
-            import hbase_snapshotter_spark.queries.relational as rel
-            import hbase_snapshotter_spark.queries.streaming_q as stq
-            for mod in (llm, stq, rel):
-                fn = getattr(mod, name, None)
-                if callable(fn):
-                    return fn
-            raise KeyError(name)
-
-    QUERIES = _LaneResolver(_REGISTRY)
+    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
+    from hbase_snapshotter_spark.testing import resolve
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -80,7 +65,8 @@ def main() -> int:
 
     out = {}
     for name in names:
-        fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
+        query = resolve(name)
+        fn = getattr(query, "__wrapped__", query)
         spark.sparkContext.setJobDescription(f"warmup:{name}")
         fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
         release_caches(keep_shared=True)

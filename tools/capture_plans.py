@@ -30,26 +30,8 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    from hbase_snapshotter_spark.queries.registry import (
-        SESSION_DEFAULTS,
-        QUERIES as _REGISTRY,
-    )
-
-    class _LaneResolver(dict):
-        """Registry keys plus bench-only lane functions (bench.py times
-        folded lanes under their module function names)."""
-
-        def __missing__(self, name):
-            import hbase_snapshotter_spark.queries.llm as llm
-            import hbase_snapshotter_spark.queries.relational as rel
-            import hbase_snapshotter_spark.queries.streaming_q as stq
-            for mod in (llm, stq, rel):
-                fn = getattr(mod, name, None)
-                if callable(fn):
-                    return fn
-            raise KeyError(name)
-
-    QUERIES = _LaneResolver(_REGISTRY)
+    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
+    from hbase_snapshotter_spark.testing import resolve
 
     builder = (
         SparkSession.builder.master("local[4]")
@@ -68,7 +50,8 @@ def main() -> int:
         os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
+        query = resolve(name)
+        fn = getattr(query, "__wrapped__", query)
         df = fn(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):

@@ -28,7 +28,7 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from hbase_snapshotter_spark.testing import (
         compare,

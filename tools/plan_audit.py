@@ -13,6 +13,7 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -22,7 +23,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from hbase_snapshotter_spark.queries.registry import QUERIES
 
     spark = (
