@@ -185,7 +185,6 @@ HEADLINE_R7 = [
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     # Bench measures the APPROXIMATE paths' real cost: the in-query
@@ -195,25 +194,9 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_RECALL_PROBE", "0")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import SparkSession
+    from hbase_snapshotter_spark.testing import resolve, session
 
-    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
-    from hbase_snapshotter_spark.testing import resolve
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hbase-snapshotter-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for _k, _v in SESSION_DEFAULTS.items():  # bench calls unwrapped fns
-        builder = builder.config(_k, _v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("hbase-snapshotter-spark-bench")
 
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):

@@ -19,14 +19,14 @@ layout of ``HBaseSnapshotter.scala:39-41``)::
 Scale design (100 TB):
 
 - The time-range predicate is a plain ``cell_ts <= ts`` filter that
-  Catalyst pushes into the Parquet scan (min/max pruning; partition
-  pruning when the log is date-partitioned) — same effect as the
-  reference's server-side ``Scan.setTimeRange`` (HBaseSnapshotter.scala:124).
-- Latest-per-cell + pivot is ONE hash aggregation (``groupBy(row_key)
-  .pivot(...).agg(max(struct(cell_ts, value)))``): partial aggregation
-  runs map-side before the single shuffle by ``row_key``, so shuffle
-  volume is ~one row per key per partition, not the raw change volume.
-  No window sort is needed anywhere on this path.
+  Catalyst pushes into the Parquet scan (row-group min/max pruning) —
+  same effect as the reference's server-side ``Scan.setTimeRange``
+  (HBaseSnapshotter.scala:124).
+- Latest-per-cell (:func:`latest_cells`) and the pivot are two
+  aggregations, each with partial aggregation map-side before its
+  shuffle, so shuffle volume is ~one row per live cell per partition,
+  not the raw change volume.  No window sort is needed anywhere on this
+  path.
 - All decode logic is column expressions → whole-stage codegen; there is
   no Python on the data path.
 """
@@ -278,17 +278,12 @@ def snapshot_as_of(
             "binding (explicit_schema([]) or a schema of synthetic columns "
             "only) — nothing to snapshot")
 
-    latest = (
-        as_of(changelog, ts)
-        .filter(keep)
-        .groupBy("row_key", "family", "qualifier")
-        .agg(F.max(F.struct("cell_ts", "value")).alias("__latest"))
-    )
     pivoted = (
-        latest.withColumn("__cell", F.concat_ws(":", "family", "qualifier"))
+        latest_cells(as_of(changelog, ts).filter(keep))
+        .withColumn("__cell", F.concat_ws(":", "family", "qualifier"))
         .groupBy("row_key")
         .pivot("__cell", list(dict.fromkeys(cells)))
-        .agg(F.first("__latest.value"))
+        .agg(F.first("value"))
     )
 
     out: list[Column] = []

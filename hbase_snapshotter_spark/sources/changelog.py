@@ -10,16 +10,14 @@ downstream only sees the DataFrame, so the source swaps freely.
 
 A change log on disk is a directory of Parquet **regions** (one file per
 HBase region store file or CDC chunk, at any depth, so a Spark
-``partitionBy("dt")`` layout reads as is).  :func:`select_regions` lists
-and prunes them: a region whose footer statistics put every ``cell_ts``
-outside the time range is never opened — the analogue of the reference
-not scanning a region at all.  Spark cannot derive a ``dt=`` partition
-value from a ``cell_ts`` predicate, so on a date-partitioned log it is
-these footer statistics, not partition pruning, that skip files.
-:func:`read_regions` serves the snapshot job from the kept regions with
-Spark's native Parquet scan, where the ``cell_ts <= ts`` filter also
-prunes row groups; ``sources.pyds`` applies the same rule in its Python
-data source.
+``partitionBy("dt")`` layout reads as is).  :func:`read_regions` lists
+them and prunes by time: a region whose footer statistics put every
+``cell_ts`` after the snapshot time is never scanned — the analogue of
+the reference not scanning a region at all.  Spark cannot derive a
+``dt=`` partition value from a ``cell_ts`` predicate, so on a
+date-partitioned log it is these footer statistics, not partition
+pruning, that skip files.  The kept regions are read with Spark's native
+Parquet scan, where the ``cell_ts <= ts`` filter also prunes row groups.
 """
 
 from __future__ import annotations
@@ -94,8 +92,8 @@ def region_files(path: str) -> list[str]:
         part.startswith(("_", ".")) for part in os.path.relpath(f, path).split(os.sep)))
 
 
-def _region_overlaps(path: str, lo: float, hi: float) -> bool:
-    """Whether region ``path`` may hold a cell with ``lo <= cell_ts <= hi``,
+def _region_overlaps(path: str, hi: float) -> bool:
+    """Whether region ``path`` may hold a cell with ``cell_ts <= hi``,
     from its Parquet footer alone.  A region without complete ``cell_ts``
     statistics is kept.  Raises ``ValueError`` naming the file when a
     change-log column is missing: an explicit read schema would otherwise
@@ -111,19 +109,7 @@ def _region_overlaps(path: str, lo: float, hi: float) -> bool:
     stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
     if not stats or any(st is None or st.min is None for st in stats):
         return True
-    return min(st.min for st in stats) <= hi and max(st.max for st in stats) >= lo
-
-
-def select_regions(
-    path: str, lo: float = float("-inf"), hi: float = float("inf")
-) -> tuple[list[str], list[str]]:
-    """List the region files under ``path`` and prune them to the time
-    range ``[lo, hi]`` by footer statistics.  Returns ``(all, kept)``;
-    raises ``FileNotFoundError`` when ``path`` holds no region file."""
-    files = region_files(path)
-    if not files:
-        raise FileNotFoundError(f"no region files under {path}")
-    return files, [f for f in files if _region_overlaps(f, lo, hi)]
+    return min(st.min for st in stats) <= hi
 
 
 def read_regions(spark: SparkSession, path: str, ts: int | None = None) -> DataFrame:
@@ -131,9 +117,13 @@ def read_regions(spark: SparkSession, path: str, ts: int | None = None) -> DataF
     files: regions that hold no cell at or before ``ts`` are pruned on
     the driver, and the kept ones are read with Spark's native Parquet
     scan, where the snapshot's ``cell_ts <= ts`` filter reaches the row
-    groups.  ``ts`` < 0 / ``None`` = "now" (no pruning)."""
+    groups.  ``ts`` < 0 / ``None`` = "now" (no pruning).  Raises
+    ``FileNotFoundError`` when ``path`` holds no region file."""
+    files = region_files(path)
+    if not files:
+        raise FileNotFoundError(f"no region files under {path}")
     hi = float("inf") if ts is None or ts < 0 else ts
-    _, kept = select_regions(path, hi=hi)
+    kept = [f for f in files if _region_overlaps(f, hi)]
     # with an explicit schema, no paths reads as an empty change log
     return spark.read.schema(CHANGELOG_DDL).parquet(*kept)
 

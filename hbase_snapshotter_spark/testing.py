@@ -1,7 +1,8 @@
 """Cross-engine comparison helpers shared by tools/oracle_check.py and
 the pytest suite: normalize values (float fuzz → 6 dp, timestamps →
 ISO), sort columns by name and rows lexicographically, fingerprint.
-Also :func:`resolve`, the query lookup the bench and the tools share."""
+Also :func:`resolve`, the query lookup the bench and the tools share,
+and :func:`session`, the Spark session they time queries in."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import datetime as dt
 import decimal
 import hashlib
 import math
+import os
 
 DUCKDB_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -113,3 +115,31 @@ def resolve(name: str):
         if callable(fn):
             return fn
     raise KeyError(name)
+
+
+def session(app_name: str):
+    """The bench's Spark session: ``local[$SPARK_GRAFT_CPUS]`` (default
+    32) with 2× that many shuffle partitions, AQE with partition
+    coalescing, UTC, ``$SPARK_GRAFT_DRIVER_MEM`` (default 16g) of driver
+    memory, no UI, the registry's ``SESSION_DEFAULTS`` (callers run
+    unwrapped query functions) and ERROR-level logging."""
+    from pyspark.sql import SparkSession
+
+    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(cpus * 2))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.ui.enabled", "false")
+    )
+    for k, v in SESSION_DEFAULTS.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

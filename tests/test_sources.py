@@ -47,7 +47,7 @@ def test_partitioned_snapshot_write(spark, log, tmp_path):
         spark.sql("DROP TABLE snap_part")
 
 
-# ------------------- Python Data Source: region-split change-log (S1)
+# ------------------- region-split change log (S1): batch read + stream tail
 @pytest.fixture(scope="module")
 def region_dir(spark, log, tmp_path_factory):
     """The change log written as 4 'region' files split by row-key hash
@@ -69,90 +69,32 @@ def region_dir(spark, log, tmp_path_factory):
     return final
 
 
-def test_pyds_serves_identical_changelog(spark, log, region_dir):
-    from hbase_snapshotter_spark.sources import pyds
+def test_read_regions_serves_identical_changelog(spark, log, region_dir):
+    from hbase_snapshotter_spark.sources.changelog import read_regions
 
-    pyds.register(spark)
-    got = spark.read.format("changelog").option("path", region_dir).load()
+    got = read_regions(spark, region_dir)
     assert [f.simpleString() for f in got.schema.fields] == \
            [f.simpleString() for f in log.schema.fields]
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in log.collect()}
 
 
-def test_pyds_snapshot_runs_unchanged_with_pushdown(spark, log, region_dir):
-    """snapshot_as_of over the custom source == over the parquet log,
-    and the time-range predicate reaches the source (Scan.setTimeRange
-    analogue) instead of being applied post-scan: the comparison
-    predicates disappear from the Spark-side Filter because pushFilters
-    consumed them (a control run with pushdown disabled shows them)."""
-    from hbase_snapshotter_spark.queries.snapshot_q import SNAPSHOT_TS_MS
+def test_pyds_register_changes_no_session_conf(spark):
+    """Registering the streaming source is all ``register`` does: no
+    session conf is set as a side effect."""
     from hbase_snapshotter_spark.sources import pyds
 
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    before = spark.conf.getAll
     pyds.register(spark)
-    src = spark.read.format("changelog").option("path", region_dir).load()
-    want = {tuple(r) for r in
-            snapshot_as_of(log, events_snapshot_schema(), SNAPSHOT_TS_MS).collect()}
-    got_df = snapshot_as_of(src, events_snapshot_schema(), SNAPSHOT_TS_MS)
-    got = {tuple(r) for r in got_df.collect()}
-    assert got == want
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan changelog" in plan
-    assert " <= " not in plan           # time range consumed by the source
-    # control: with pushdown off, the same comparison stays Spark-side
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
-    try:
-        ctl = snapshot_as_of(src, events_snapshot_schema(), SNAPSHOT_TS_MS)
-        assert " <= " in ctl._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    assert spark.conf.getAll == before
 
 
-def test_pyds_prunes_disjoint_regions(spark, log, tmp_path_factory):
-    """Regions whose cell_ts range lies entirely after the snapshot
-    bound are never scanned — partition-level time pruning."""
-    import glob
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from hbase_snapshotter_spark.sources import pyds
-
-    cut = log.agg(F.expr("percentile(cell_ts, 0.5)")).head()[0]
-    tmp = str(tmp_path_factory.mktemp("time_regions_raw"))
-    final = str(tmp_path_factory.mktemp("time_regions"))
-    log.filter(F.col("cell_ts") <= cut).coalesce(1) \
-        .write.mode("overwrite").parquet(f"{tmp}/early")
-    log.filter(F.col("cell_ts") > cut).coalesce(1) \
-        .write.mode("overwrite").parquet(f"{tmp}/late")
-    for name in ("early", "late"):
-        part = glob.glob(f"{tmp}/{name}/part-*.parquet")[0]
-        shutil.copy(part, os.path.join(final, f"{name}.parquet"))
-
-    import json
-
-    pyds.register(spark)
-    scan_log = os.path.join(str(tmp_path_factory.mktemp("scanlog")), "scan.json")
-    src = (spark.read.format("changelog")
-           .option("path", final).option("debugScanLog", scan_log).load())
-    n = src.filter(F.col("cell_ts") <= int(cut)).count()
-    assert n == log.filter(F.col("cell_ts") <= cut).count()
-    with open(scan_log) as fh:
-        scan = json.load(fh)
-    assert any("cell_ts" in p for p in scan["pushed"])
-    assert scan["regions_total"] == 2 and scan["regions_read"] == 1
-
-
-@pytest.mark.parametrize("mode", ["partitioned", "simple"])
-def test_pyds_streaming_tails_new_region_files(spark, log, tmp_path_factory, mode):
+def test_pyds_streaming_tails_new_region_files(spark, log, tmp_path_factory):
     """readStream over the changelog source: first run consumes the
     existing region files; a file appearing later is delivered exactly
     once on the next run from the same checkpoint (offset = consumed
-    file set).  Runs against both stream readers — the default
-    partitioned one (executor-side reads, proven by per-region marker
-    files dropped from the executor python worker) and the driver-side
-    simple one selected via .option("streamReader", "simple")."""
+    file set).  Reads run on executors, proven by per-region marker
+    files dropped from the executor python worker."""
     import glob
     import os
     import shutil
@@ -179,11 +121,8 @@ def test_pyds_streaming_tails_new_region_files(spark, log, tmp_path_factory, mod
     out = str(tmp_path_factory.mktemp("stream_out"))
 
     def run_batch():
-        reader = (spark.readStream.format("changelog").option("path", regions)
-                  .option("debugStreamDir", dbg))
-        if mode == "simple":
-            reader = reader.option("streamReader", "simple")
-        q = (reader.load()
+        q = (spark.readStream.format("changelog").option("path", regions)
+             .option("debugStreamDir", dbg).load()
              .writeStream.format("parquet").option("path", out)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
@@ -200,14 +139,11 @@ def test_pyds_streaming_tails_new_region_files(spark, log, tmp_path_factory, mod
     assert got.filter("qualifier = 'purchase'").count() == late.count()
 
     markers = sorted(os.path.basename(p) for p in glob.glob(f"{dbg}/*.read"))
-    if mode == "partitioned":
-        # one executor-side read per region file, none re-scanned
-        assert markers == ["r0.parquet.read", "r1.parquet.read"]
-        for m in markers:
-            with open(os.path.join(dbg, m)) as fh:
-                assert len(fh.read().splitlines()) == 1
-    else:
-        assert markers == []  # simple reader reads on the driver
+    # one executor-side read per region file, none re-scanned
+    assert markers == ["r0.parquet.read", "r1.parquet.read"]
+    for m in markers:
+        with open(os.path.join(dbg, m)) as fh:
+            assert len(fh.read().splitlines()) == 1
 
 
 def test_pyds_stream_feeds_snapshot_maintenance(spark, log, region_dir, tmp_path):

@@ -32,32 +32,14 @@ def main() -> int:
     do_prof = ns.cprofile
     names = ns.names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_RECALL_PROBE", "0")
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
-
     from hbase_snapshotter_spark.cache import release_caches
-    from hbase_snapshotter_spark.queries.registry import SESSION_DEFAULTS
-    from hbase_snapshotter_spark.testing import resolve
+    from hbase_snapshotter_spark.testing import resolve, session
 
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("build-profile")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in SESSION_DEFAULTS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("build-profile")
 
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
