@@ -216,16 +216,8 @@ def latest_cells_multi(
         F.explode(F.filter(ts_arr, lambda t: F.col(ts_col) <= t)).alias("snapshot_ts"),
         *[F.col(c) for c in changelog.columns],
     )
-    agg = F.max(F.struct(F.col(ts_col), F.col(value_col))).alias("__latest")
-    return (
-        fanned.groupBy("snapshot_ts", *key_cols)
-        .agg(agg)
-        .select(
-            "snapshot_ts", *key_cols,
-            F.col(f"__latest.{value_col}").alias(value_col),
-            F.col(f"__latest.{ts_col}").alias(ts_col),
-        )
-    )
+    return latest_cells(fanned, None, key_cols=("snapshot_ts", *key_cols),
+                        ts_col=ts_col, value_col=value_col)
 
 
 def snapshot_as_of(

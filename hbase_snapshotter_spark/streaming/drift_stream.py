@@ -79,14 +79,13 @@ class DriftMonitor:
         self.ref_dir = ref_dir
         self.value_col = value_col
         self.group_cols = group_cols
-        #: batch dirs to keep live; None disables compaction.  The
-        #: generation pre-sums expired histograms (lossless — the only
-        #: consumer re-aggregates) and carries verdicts as-is.
-        self.retention = retention
+        # retention: batch dirs to keep live (None: no compaction).
+        # The generation pre-sums expired histograms (lossless — the
+        # only consumer re-aggregates) and carries verdicts as-is.
         self._compactor = BatchDirCompactor(
             state_dir, subtables=("hist", "verdict"),
             done_subpath=os.path.join("verdict", "_DONE"),
-            keep_last=retention if retention else 8,
+            retention=retention,
             aggregate={"hist": lambda df: df
                        .groupBy(*group_cols, "bucket")
                        .agg(F.sum("cnt").alias("cnt"))})
@@ -149,8 +148,7 @@ class DriftMonitor:
         # verdict dir is never folded into a permanent generation).
         with open(os.path.join(out, "verdict", "_DONE"), "w") as fh:
             fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
+        self._compactor.compact(spark)
 
 
 def maintain_drift(stream_df: DataFrame, state_dir: str, ref_dir: str,

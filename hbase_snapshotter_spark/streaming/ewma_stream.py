@@ -58,15 +58,14 @@ class EwmaMonitor:
         self.state_dir = state_dir
         self.value_col = value_col
         self.group_cols = group_cols
-        #: batch dirs to keep live; None disables compaction (r7
-        #: behavior).  Verdicts of compacted batches stay readable from
-        #: the generation; the latest per-group STATE always lives in a
-        #: kept batch dir (keep_last >= 1).
-        self.retention = retention
+        # retention: batch dirs to keep live (None: no compaction).
+        # Verdicts of compacted batches stay readable from the
+        # generation; the latest per-group STATE always lives in a
+        # kept batch dir.
         self._compactor = BatchDirCompactor(
             state_dir, subtables=("verdict",),
             done_subpath=os.path.join("verdict", "_DONE"),
-            keep_last=retention if retention else 8)
+            retention=retention)
         os.makedirs(state_dir, exist_ok=True)
 
     def _done_dirs(self) -> list[str]:
@@ -133,8 +132,7 @@ class EwmaMonitor:
         # batch re-runs the whole thing
         with open(os.path.join(out, "verdict", "_DONE"), "w") as fh:
             fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
+        self._compactor.compact(spark)
 
 
 def maintain_ewma(stream_df: DataFrame, state_dir: str, value_col: str,

@@ -62,15 +62,13 @@ class HeavyHittersMaintainer:
         self.item_col = item_col
         self.k = k
         self.support_permille = support_permille
-        #: batch dirs to keep live; None disables compaction.  Only the
-        #: verdict history compacts — the latest state/meta always live
-        #: in a kept dir (keep_last >= 1), so reads never need expired
-        #: dirs.
-        self.retention = retention
+        # retention: batch dirs to keep live (None: no compaction).
+        # Only the verdict history compacts — the latest state/meta
+        # always live in a kept dir, so reads never need expired dirs.
         self._compactor = BatchDirCompactor(
             state_dir, subtables=("verdict",),
             done_subpath=os.path.join("verdict", "_DONE"),
-            keep_last=retention if retention else 8)
+            retention=retention)
         os.makedirs(state_dir, exist_ok=True)
 
     # -- reads ---------------------------------------------------------
@@ -150,8 +148,7 @@ class HeavyHittersMaintainer:
         # and the re-delivered batch re-runs the whole advance
         with open(os.path.join(out, "verdict", "_DONE"), "w") as fh:
             fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
+        self._compactor.compact(spark)
 
 
 def maintain_heavy_hitters(stream_df: DataFrame, state_dir: str,

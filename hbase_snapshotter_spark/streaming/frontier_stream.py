@@ -7,7 +7,9 @@ coordinate pairs merging associatively by count sum + min
 representative) also makes the streaming form exact for ANY split of
 the rows into micro-batches in ANY order: per batch, sweep the batch
 alone (the only data-sized work — output is batch-frontier-sized),
-then advance the prior frontier state with it.  The streamed chain
+then advance the prior frontier state with it — :func:`frontier_apply`,
+run under the family's full-state maintainer
+(:class:`~.streaming.retention.StateMaintainer`).  The streamed chain
 equals the batch-built frontier over everything seen BIT FOR BIT,
 which is what the pytest pins.
 
@@ -21,66 +23,24 @@ every older one)."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from hbase_snapshotter_spark.operators.sampling import (
     advance_pareto_frontier,
     pareto_frontier,
 )
-from hbase_snapshotter_spark.streaming.retention import BatchDirCompactor
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import ApplyFn
 
 
-class FrontierStateMaintainer:
-    """foreachBatch sink advancing a materialized Pareto frontier; the
-    advanced full frontier lands in ``state_dir/batch=<id>/state``."""
+def frontier_apply(*, group_cols: list[str], max_col: str, min_col: str,
+                   id_col: str) -> ApplyFn:
+    """Apply closure for a materialized Pareto frontier: the batch's
+    own frontier advances the prior one."""
+    kw = dict(group_cols=group_cols, max_col=max_col, min_col=min_col,
+              id_col=id_col)
 
-    def __init__(self, state_dir: str, *, group_cols: list[str],
-                 max_col: str, min_col: str, id_col: str,
-                 retention: int | None = None):
-        self.state_dir = state_dir
-        self.kw = dict(group_cols=group_cols, max_col=max_col,
-                       min_col=min_col, id_col=id_col)
-        self.retention = retention
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
-        os.makedirs(state_dir, exist_ok=True)
+    def apply(prior: DataFrame | None, batch: DataFrame) -> DataFrame:
+        return (pareto_frontier(batch, **kw) if prior is None
+                else advance_pareto_frontier(prior, batch, **kw))
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """The latest completed batch's full advanced frontier."""
-        done = self._compactor.live_done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "_DONE")):
-            return  # re-delivery: count merge must not re-apply
-        prior = self.state(spark)
-        new = (pareto_frontier(batch, **self.kw) if prior is None
-               else advance_pareto_frontier(prior, batch, **self.kw))
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        with open(os.path.join(out, "_DONE"), "w") as fh:
-            fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
-
-
-def maintain_frontier(stream_df: DataFrame, state_dir: str, *,
-                      group_cols: list[str], max_col: str, min_col: str,
-                      id_col: str, retention: int | None = None,
-                      **start_kwargs):
-    """Start the frontier maintenance query.  Returns
-    (StreamingQuery, FrontierStateMaintainer)."""
-    maintainer = FrontierStateMaintainer(
-        state_dir, group_cols=group_cols, max_col=max_col,
-        min_col=min_col, id_col=id_col, retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+    return apply

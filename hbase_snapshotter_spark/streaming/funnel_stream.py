@@ -70,10 +70,9 @@ class FunnelStateMaintainer:
         self.patterns = patterns
         self.gap_ms = gap_ms
         self.allowed_lateness_ms = allowed_lateness_ms
-        self.retention = retention
         self._compactor = BatchDirCompactor(
             state_dir, subtables=("matches",), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
+            retention=retention)
         os.makedirs(state_dir, exist_ok=True)
 
     def _latest(self, spark: SparkSession, sub: str) -> DataFrame | None:
@@ -170,8 +169,7 @@ class FunnelStateMaintainer:
         events.unpersist()
         with open(os.path.join(out, "_DONE"), "w") as fh:
             fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
+        self._compactor.compact(spark)
 
 
 def maintain_funnels(stream_df: DataFrame, state_dir: str, *,

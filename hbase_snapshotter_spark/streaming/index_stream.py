@@ -7,10 +7,12 @@ are per-document-decomposable state edits.  What production runs is
 the COMPOSITION under a stream: a feed of ``op ∈ I/U/D`` document (or
 vector) changes, applied per micro-batch so the serving index is
 always current — without re-tokenizing/re-encoding anything but the
-batch.  This maintainer is generic over the index: pass an ``apply``
-closure ``(prior_state | None, batch) → new full state`` built from
-the batch-exact pieces; two canonical closures ship here
-(:func:`bm25_feed_apply`, :func:`pq_feed_apply`).
+batch.  The generic full-state maintainer
+(:class:`~.streaming.retention.StateMaintainer`) runs it: pass an
+``apply`` closure ``(prior_state | None, batch) → new full state``
+built from the batch-exact pieces; three canonical closures ship here
+(:func:`bm25_feed_apply`, :func:`pq_feed_apply`,
+:func:`graph_feed_apply`).
 
 Order within a batch: deletes/old-versions retract FIRST, then
 inserts/updates advance — an ``op="U"`` therefore lands as
@@ -41,16 +43,10 @@ documents.
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_snapshotter_spark.streaming.retention import BatchDirCompactor
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
-
-ApplyFn = Callable[[DataFrame | None, DataFrame], DataFrame]
+from hbase_snapshotter_spark.streaming.retention import ApplyFn
 
 
 def bm25_feed_apply(*, id_col: str = "doc_id",
@@ -154,49 +150,3 @@ def graph_feed_apply(*, id_col: str = "doc_id", text_col: str = "text",
         return pack(new_sh, new_e)
 
     return apply
-
-
-class IndexFeedMaintainer:
-    """foreachBatch sink advancing one serving index from a CDC feed;
-    the advanced full state lands in ``state_dir/batch=<id>/state``."""
-
-    def __init__(self, state_dir: str, apply: ApplyFn,
-                 retention: int | None = None):
-        self.state_dir = state_dir
-        self.apply = apply
-        self.retention = retention
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
-        os.makedirs(state_dir, exist_ok=True)
-
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """The latest completed batch's full index state."""
-        done = self._compactor.live_done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "_DONE")):
-            return  # re-delivered batch: apply must not re-run
-        new = self.apply(self.state(spark), batch)
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        with open(os.path.join(out, "_DONE"), "w") as fh:
-            fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
-
-
-def maintain_index(stream_df: DataFrame, state_dir: str, apply: ApplyFn,
-                   retention: int | None = None, **start_kwargs):
-    """Start the index-maintenance query.  Returns (StreamingQuery,
-    IndexFeedMaintainer)."""
-    maintainer = IndexFeedMaintainer(state_dir, apply,
-                                     retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer

@@ -66,20 +66,19 @@ class NearDupMaintainer:
         self.corpus = corpus
         self.id_col, self.text_col = id_col, text_col
         self.threshold = threshold
-        #: batch dirs to keep live per root; None disables compaction.
-        #: Band rows keep their ``__batch`` tag through the generation,
-        #: so document-wins and the ``__batch < B`` novelty read are
-        #: unchanged; compacted batch ids are re-delivery no-ops via
-        #: the watermark (they must be — re-adding a compacted batch's
-        #: live dir would double its band rows).
-        self.retention = retention
-        keep = retention if retention else 8
+        # retention: batch dirs to keep live per root (None: no
+        # compaction).  Band rows keep their ``__batch`` tag through
+        # the generation, so document-wins and the ``__batch < B``
+        # novelty read are unchanged; compacted batch ids are
+        # re-delivery no-ops via the watermark (they must be —
+        # re-adding a compacted batch's live dir would double its band
+        # rows).
         self._state_c = BatchDirCompactor(
             state_dir, subtables=("",), done_subpath="_SUCCESS",
-            keep_last=keep)
+            retention=retention)
         self._verdict_c = BatchDirCompactor(
             verdict_dir, subtables=("",), done_subpath="_SUCCESS",
-            keep_last=keep)
+            retention=retention)
         os.makedirs(state_dir, exist_ok=True)
         os.makedirs(verdict_dir, exist_ok=True)
 
@@ -125,12 +124,11 @@ class NearDupMaintainer:
             .withColumn("__batch", F.lit(batch_id))
         bands.write.mode("overwrite").parquet(
             os.path.join(self.state_dir, f"batch={batch_id}"))
-        if self.retention:
-            # verdicts first: the state watermark gates re-delivery, so
-            # it must advance last (crash between the two heals on the
-            # next compaction)
-            self._verdict_c.compact(spark)
-            self._state_c.compact(spark)
+        # verdicts first: the state watermark gates re-delivery, so it
+        # must advance last (crash between the two heals on the next
+        # compaction)
+        self._verdict_c.compact(spark)
+        self._state_c.compact(spark)
 
 
 def maintain_neardup(stream_df: DataFrame, state_dir: str, verdict_dir: str,

@@ -66,15 +66,14 @@ class NoveltyMaintainer:
         self.state_dir = state_dir
         self.key_col = key_col
         self.m_bits = bloom_bits_for(expected_keys)
-        #: batch dirs to keep live; None disables compaction (r7
-        #: behavior).  The seen-key SET is the union of the compact
-        #: generation and the live dirs — novel keys are disjoint
-        #: across batches by construction, so the merge is trivially
-        #: lossless and the bitmap recovery is unchanged.
-        self.retention = retention
+        # retention: batch dirs to keep live (None: no compaction).
+        # The seen-key SET is the union of the compact generation and
+        # the live dirs — novel keys are disjoint across batches by
+        # construction, so the merge is trivially lossless and the
+        # bitmap recovery is unchanged.
         self._compactor = BatchDirCompactor(
             state_dir, subtables=("",), done_subpath="_SUCCESS",
-            keep_last=retention if retention else 8)
+            retention=retention)
         os.makedirs(state_dir, exist_ok=True)
         self.bitmap: bytes | None = None
 
@@ -124,8 +123,7 @@ class NoveltyMaintainer:
         self.bitmap = (
             np.frombuffer(self.bitmap, dtype=np.uint8)
             | np.frombuffer(inc, dtype=np.uint8)).tobytes()
-        if self.retention:
-            self._compactor.compact(spark)
+        self._compactor.compact(spark)
 
 
 def maintain_novelty(stream_df: DataFrame, state_dir: str, key_col: str,

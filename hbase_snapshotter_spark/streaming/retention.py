@@ -1,8 +1,10 @@
-"""Bounded state-dir retention for the foreachBatch maintainer family
-(VERDICT r7 task 5).
+"""Bounded state-dir retention for the foreachBatch maintainer family,
+and the family's one full-state maintainer (:class:`StateMaintainer`).
 
-The maintainers (`ewma_stream`, `drift_stream`, `neardup_stream`,
-`novelty_stream`) write one ``batch=<id>`` directory per micro-batch —
+Every maintainer (:class:`StateMaintainer` and the union-read ones in
+`ewma_stream`, `drift_stream`, `freq_stream`, `funnel_stream`,
+`neardup_stream`, `novelty_stream`) writes one ``batch=<id>``
+directory per micro-batch —
 idempotent and restart-safe, but the directory COUNT grows without
 bound over months of micro-batches (every read lists and opens O(#
 batches) dirs, and small-file pressure grows with it).  This module
@@ -37,6 +39,17 @@ Invariants:
   between publication and cleanup is healed by the next compaction
   (stale generations are swept, expired dirs sit at <= watermark and
   are ignored by every reader).
+
+Full-state maintainers hold the WHOLE advanced state in every batch
+dir, so a read touches only the newest complete dir and retention
+deletes expired dirs outright (``subtables=()``: the generation holds
+just ``_DONE``; every newer state subsumes them).  One class serves
+them all: :class:`StateMaintainer` takes an ``apply(prior | None,
+batch) -> new full state`` closure, and each state family ships its
+closure beside its docstring (``topk_stream.topk_apply``,
+``sketch_stream.sketch_apply``, ``frontier_stream.frontier_apply``,
+``session_stream.session_apply``, ``index_stream.bm25_feed_apply`` /
+``pq_feed_apply`` / ``graph_feed_apply``).
 """
 
 from __future__ import annotations
@@ -47,6 +60,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+
+ApplyFn = Callable[[DataFrame | None, DataFrame], DataFrame]
+
 
 class BatchDirCompactor:
     """Retention policy over one maintainer root directory.
@@ -55,23 +72,25 @@ class BatchDirCompactor:
     generation (``""`` means the batch dir itself IS the table).
     ``done_subpath``: the path inside a batch dir whose existence marks
     it complete (the maintainer's own marker convention).
-    ``keep_last``: live completed batch dirs to keep out of the
-    generation (>= 1 so latest-state readers keep a live dir).
+    ``retention``: live completed batch dirs to keep out of the
+    generation (>= 1 so latest-state readers keep a live dir);
+    ``None``/``0`` turns :meth:`compact` into a no-op.
     ``aggregate``: optional ``{subtable: df -> df}`` pre-merge applied
     when building the generation — only for tables whose consumers
     re-aggregate (lossless merges).
     """
 
     def __init__(self, root: str, *, subtables: tuple[str, ...] = ("verdict",),
-                 done_subpath: str = "verdict/_DONE", keep_last: int = 8,
+                 done_subpath: str = "verdict/_DONE",
+                 retention: int | None = None,
                  aggregate: dict[str, Callable[[DataFrame], DataFrame]]
                  | None = None):
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+        if retention is not None and retention < 0:
+            raise ValueError(f"retention must be >= 0, got {retention}")
         self.root = root
         self.subtables = tuple(subtables)
         self.done_subpath = done_subpath
-        self.keep_last = keep_last
+        self.retention = retention
         self.aggregate = aggregate or {}
 
     def _entries(self, prefix: str) -> list[tuple[int, str]]:
@@ -123,6 +142,8 @@ class BatchDirCompactor:
     def compact(self, spark: SparkSession) -> int:
         """Fold completed batch dirs beyond the retention window into a
         new generation; returns how many batch dirs were folded."""
+        if not self.retention:
+            return 0
         wm = self.watermark()
         # Heal earlier crashes FIRST (a crash between generation publish
         # and the deletion loop below leaves batch dirs at ids <= the
@@ -140,7 +161,7 @@ class BatchDirCompactor:
         done = [(i, p) for i, p in self._entries("batch=")
                 if i > wm
                 and os.path.exists(os.path.join(p, self.done_subpath))]
-        expired = done[:-self.keep_last]
+        expired = done[:-self.retention]
         if not expired:
             return 0
         new_wm = expired[-1][0]
@@ -179,3 +200,49 @@ class BatchDirCompactor:
             if p != final:
                 shutil.rmtree(p, ignore_errors=True)
         return len(expired)
+
+
+class StateMaintainer:
+    """foreachBatch sink advancing one full state with ``apply(prior |
+    None, batch)``; the advanced state lands in
+    ``state_dir/batch=<id>/state``, ``_DONE`` last."""
+
+    def __init__(self, state_dir: str, apply: ApplyFn,
+                 retention: int | None = None):
+        self.state_dir = state_dir
+        self.apply = apply
+        self._compactor = BatchDirCompactor(
+            state_dir, subtables=(), done_subpath="_DONE",
+            retention=retention)
+        os.makedirs(state_dir, exist_ok=True)
+
+    def state(self, spark: SparkSession) -> DataFrame | None:
+        """The latest completed batch's full state."""
+        done = self._compactor.live_done_dirs()
+        if not done:
+            return None
+        return spark.read.parquet(os.path.join(done[-1], "state"))
+
+    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        out = os.path.join(self.state_dir, f"batch={batch_id}")
+        if self._compactor.is_compacted(batch_id) \
+                or os.path.exists(os.path.join(out, "_DONE")):
+            return  # re-delivered batch: apply must not re-run
+        new = self.apply(self.state(spark), batch)
+        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
+        # _DONE lands last: a crash mid-write leaves the dir incomplete
+        # and the batch re-delivers cleanly
+        with open(os.path.join(out, "_DONE"), "w") as fh:
+            fh.write("")
+        self._compactor.compact(spark)
+
+
+def maintain_state(stream_df: DataFrame, state_dir: str, apply: ApplyFn,
+                   retention: int | None = None, **start_kwargs):
+    """Start a full-state maintenance query.  Returns (StreamingQuery,
+    StateMaintainer)."""
+    maintainer = StateMaintainer(state_dir, apply, retention=retention)
+    query = start_foreach_batch(
+        stream_df, maintainer.process_batch, **start_kwargs)
+    return query, maintainer

@@ -4,9 +4,10 @@ the N93 batch economics).
 The streaming suite's session WINDOW (``windows.py``) aggregates each
 session's rows under a watermark; what it cannot produce is the
 CROSS-session economics over everything seen (bounce share, mean
-events/span), because closed sessions leave the state store.  This
-maintainer keeps the N93 semantics exactly: per micro-batch, sessionize
-the batch alone (events-sized work), then merge the resulting session
+events/span), because closed sessions leave the state store.  :func:`session_apply`,
+run under the family's full-state maintainer
+(:class:`~.streaming.retention.StateMaintainer`), keeps the N93
+semantics exactly: per micro-batch, sessionize the batch alone (events-sized work), then merge the resulting session
 INTERVALS into the prior interval state
 (:func:`~.operators.timeseries.merge_session_intervals` — sessions-
 sized work).  Because events only ever JOIN sessions and each
@@ -15,7 +16,8 @@ ANY split of the events in ANY arrival order::
 
     merge(intervals(A) ∪ intervals(B)) = intervals(A ⊎ B)
 
-so the maintained state — and the economics derived from it — equals
+so the maintained state — and the economics derived from it on read,
+``session_economics(maintainer.state(spark))`` — equals
 the batch form over all delivered events BIT FOR BIT (the pytest pins
 exactly that on a shuffled split, no tolerance).
 
@@ -38,83 +40,26 @@ algebra.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from hbase_snapshotter_spark.operators.timeseries import (
     merge_session_intervals,
-    session_economics,
     session_intervals,
 )
-from hbase_snapshotter_spark.streaming.retention import BatchDirCompactor
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import ApplyFn
 
 
-class SessionStateMaintainer:
-    """foreachBatch sink maintaining the merged session-interval state;
-    the advanced full state lands in ``state_dir/batch=<id>/state``."""
+def session_apply(*, key_col: str, ts_col: str, id_col: str,
+                  gap_ms: int) -> ApplyFn:
+    """Apply closure for the merged session-interval state: sessionize
+    the batch alone, then merge its intervals into the prior."""
 
-    def __init__(self, state_dir: str, *, key_col: str, ts_col: str,
-                 id_col: str, gap_ms: int, retention: int | None = None):
-        self.state_dir = state_dir
-        self.key_col = key_col
-        self.ts_col = ts_col
-        self.id_col = id_col
-        self.gap_ms = gap_ms
-        #: batch dirs to keep live; None disables cleanup.  Expired dirs
-        #: are deleted outright: each state is subsumed by newer ones.
-        self.retention = retention
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
-        os.makedirs(state_dir, exist_ok=True)
+    def apply(prior: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = session_intervals(batch, key_col=key_col, ts_col=ts_col,
+                                  id_col=id_col, gap_ms=gap_ms)
+        return (delta if prior is None
+                else merge_session_intervals(prior.unionByName(delta),
+                                             key_col=key_col,
+                                             gap_ms=gap_ms))
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """The latest completed batch's full merged interval state."""
-        done = self._compactor.live_done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def economics(self, spark: SparkSession) -> DataFrame | None:
-        """The N93 one-row summary over everything seen — derived from
-        the interval state on read, never stored (no second source of
-        truth to drift)."""
-        st = self.state(spark)
-        return None if st is None else session_economics(st)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "_DONE")):
-            return  # re-delivered batch: the merge must not re-apply
-        delta = session_intervals(
-            batch, key_col=self.key_col, ts_col=self.ts_col,
-            id_col=self.id_col, gap_ms=self.gap_ms)
-        prior = self.state(spark)
-        new = (delta if prior is None
-               else merge_session_intervals(
-                   prior.unionByName(delta),
-                   key_col=self.key_col, gap_ms=self.gap_ms))
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        # _DONE lands last: a crash mid-write leaves the dir incomplete
-        # and the batch re-delivers cleanly
-        with open(os.path.join(out, "_DONE"), "w") as fh:
-            fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
-
-
-def maintain_sessions(stream_df: DataFrame, state_dir: str, *,
-                      key_col: str, ts_col: str, id_col: str, gap_ms: int,
-                      retention: int | None = None, **start_kwargs):
-    """Start the sessionization maintenance query.  Returns
-    (StreamingQuery, SessionStateMaintainer)."""
-    maintainer = SessionStateMaintainer(
-        state_dir, key_col=key_col, ts_col=ts_col, id_col=id_col,
-        gap_ms=gap_ms, retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+    return apply

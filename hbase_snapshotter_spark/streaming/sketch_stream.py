@@ -1,5 +1,5 @@
 """Continuous sketch-state maintenance (SURVEY §2.3 N85) — ONE
-maintainer for the whole bucket-sum sketch family.
+apply closure for the whole bucket-sum sketch family.
 
 The mergeable sketch states (N58 DDSketch quantiles, N65 count-min)
 share a shape: ``(*keys, cnt)`` histogram rows whose merge is a
@@ -12,9 +12,11 @@ the batch-built state over everything seen BIT FOR BIT, which is
 exactly what the pytest pins (no tolerance, no weaker rows-only
 check).
 
-The maintainer is generic over the state builder: pass
+:func:`sketch_apply` is generic over the state builder: pass
 ``quantile_state`` / ``cms_state`` (or any builder producing
-bucket-sum-mergeable ``(*merge_keys, cnt)`` rows) and the merge keys.
+bucket-sum-mergeable ``(*merge_keys, cnt)`` rows) and the merge keys,
+and run the closure under the family's full-state maintainer
+(:class:`~.streaming.retention.StateMaintainer`).
 Every downstream consumer that reads these states — rank-normalize
 (N74), winsorize (N75), point estimates, PSI reference — refreshes
 continuously without a history rescan.
@@ -32,72 +34,24 @@ them.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_snapshotter_spark.streaming.retention import BatchDirCompactor
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import ApplyFn
 
 
-class SketchStateMaintainer:
-    """foreachBatch sink advancing one bucket-sum-mergeable sketch
-    state; the advanced full state lands in
-    ``state_dir/batch=<id>/state``."""
+def sketch_apply(build_state: Callable[[DataFrame], DataFrame],
+                 merge_keys: list[str]) -> ApplyFn:
+    """Apply closure for a bucket-sum sketch state: build the batch's
+    delta state and bucket-sum it into the prior."""
 
-    def __init__(self, state_dir: str,
-                 build_state: Callable[[DataFrame], DataFrame],
-                 merge_keys: list[str],
-                 retention: int | None = None):
-        self.state_dir = state_dir
-        self.build_state = build_state
-        self.merge_keys = merge_keys
-        #: batch dirs to keep live; None disables cleanup.  Expired
-        #: dirs are deleted outright (no generation build): each dir's
-        #: state is subsumed by every newer one.
-        self.retention = retention
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
-        os.makedirs(state_dir, exist_ok=True)
+    def apply(prior: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = build_state(batch)
+        return (delta if prior is None
+                else prior.unionByName(delta)
+                .groupBy(*merge_keys)
+                .agg(F.sum("cnt").cast("long").alias("cnt")))
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """The latest completed batch's full advanced state."""
-        done = self._compactor.live_done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "_DONE")):
-            return  # re-delivered batch: bucket-sum must not re-apply
-        delta = self.build_state(batch)
-        prior = self.state(spark)
-        new = (delta if prior is None
-               else prior.unionByName(delta)
-               .groupBy(*self.merge_keys)
-               .agg(F.sum("cnt").cast("long").alias("cnt")))
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        with open(os.path.join(out, "_DONE"), "w") as fh:
-            fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
-
-
-def maintain_sketch_state(stream_df: DataFrame, state_dir: str,
-                          build_state: Callable[[DataFrame], DataFrame],
-                          merge_keys: list[str],
-                          retention: int | None = None,
-                          **start_kwargs):
-    """Start the sketch-state maintenance query.  Returns
-    (StreamingQuery, SketchStateMaintainer)."""
-    maintainer = SketchStateMaintainer(
-        state_dir, build_state, merge_keys, retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+    return apply

@@ -2,8 +2,10 @@
 
 Per micro-batch, the k×groups-row state unions with the batch and the
 top-k is re-taken (:func:`~.operators.timeseries.advance_topk_state`,
-WindowGroupLimit map-side partial top-k).  Two properties make this
-the LIGHTEST maintainer in the family:
+WindowGroupLimit map-side partial top-k); :func:`topk_apply` is that
+step as an apply closure for the family's full-state maintainer
+(:class:`~.streaming.retention.StateMaintainer`).  Two properties make
+this the LIGHTEST state in the family:
 
 - **monotone**: under insert-only streams the k-row state is
   sufficient — no history rescan, ever (deletes are documented out;
@@ -24,67 +26,25 @@ outright — every newer state subsumes them.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from hbase_snapshotter_spark.operators.timeseries import (
     advance_topk_state,
     topk_state,
 )
-from hbase_snapshotter_spark.streaming.retention import BatchDirCompactor
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import ApplyFn
 
 
-class TopkStateMaintainer:
-    """foreachBatch sink advancing a per-group top-k state; the full
-    advanced state lands in ``state_dir/batch=<id>/state``."""
+def topk_apply(*, group_cols: list[str], id_col: str, score_col: str,
+               k: int) -> ApplyFn:
+    """Apply closure for a per-group top-k state: the batch's
+    ``(*group_cols, id, score)`` rows advance the prior top-k."""
+    kw = dict(group_cols=group_cols, id_col=id_col, score_col=score_col,
+              k=k)
 
-    def __init__(self, state_dir: str, *, group_cols: list[str],
-                 id_col: str, score_col: str, k: int,
-                 retention: int | None = None):
-        self.state_dir = state_dir
-        self.kw = dict(group_cols=group_cols, id_col=id_col,
-                       score_col=score_col, k=k)
-        self.retention = retention
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            keep_last=retention if retention else 8)
-        os.makedirs(state_dir, exist_ok=True)
+    def apply(prior: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = batch.select(*group_cols, id_col, score_col)
+        return (topk_state(delta, **kw) if prior is None
+                else advance_topk_state(prior, delta, **kw))
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        done = self._compactor.live_done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "_DONE")):
-            return  # harmless by idempotence; skipped to save the work
-        cols = [*self.kw["group_cols"], self.kw["id_col"],
-                self.kw["score_col"]]
-        delta = batch.select(*cols)
-        prior = self.state(spark)
-        new = (topk_state(delta, **self.kw) if prior is None
-               else advance_topk_state(prior, delta, **self.kw))
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        with open(os.path.join(out, "_DONE"), "w") as fh:
-            fh.write("")
-        if self.retention:
-            self._compactor.compact(spark)
-
-
-def maintain_topk(stream_df: DataFrame, state_dir: str, *,
-                  group_cols: list[str], id_col: str, score_col: str,
-                  k: int, retention: int | None = None, **start_kwargs):
-    """Start the top-k maintenance query.  Returns
-    (StreamingQuery, TopkStateMaintainer)."""
-    maintainer = TopkStateMaintainer(
-        state_dir, group_cols=group_cols, id_col=id_col,
-        score_col=score_col, k=k, retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+    return apply

@@ -228,7 +228,7 @@ def test_region_read_plan_is_native_parquet(spark, schema_history, time_regions)
         spark.sql("DROP TABLE IF EXISTS snap_plan")
     assert "FileScan parquet" in plan
     pushed = re.findall(r"PushedFilters: \[([^\]]*)", plan)  # may be cut with "..."
-    assert any("cell_ts" in p for p in pushed), plan
+    assert any(f"LessThanOrEqual(cell_ts,{T1})" in p for p in pushed), plan
     for node in ("BatchScan", "Python", "ArrowEval", "Pandas"):
         assert node not in plan, node
 

@@ -868,9 +868,8 @@ def test_sketch_state_maintenance_streamed_equals_batch_bit_for_bit(
         cms_state,
         quantile_state,
     )
-    from hbase_snapshotter_spark.streaming.sketch_stream import (
-        maintain_sketch_state,
-    )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.sketch_stream import sketch_apply
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     src = spark.read.parquet(event_stream_dir)
@@ -891,8 +890,8 @@ def test_sketch_state_maintenance_streamed_equals_batch_bit_for_bit(
         def run(ckpt):
             stream = replay_stream(spark, event_stream_dir, src.schema,
                                    max_files_per_trigger=1)
-            q, m = maintain_sketch_state(
-                stream, state_dir, builder, keys,
+            q, m = maintain_state(
+                stream, state_dir, sketch_apply(builder, keys),
                 checkpointLocation=str(tmp_path / ckpt), availableNow=True)
             q.awaitTermination(120)
             return m
@@ -911,9 +910,8 @@ def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.operators.sketches import quantile_state
-    from hbase_snapshotter_spark.streaming.sketch_stream import (
-        SketchStateMaintainer,
-    )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.sketch_stream import sketch_apply
 
     N, KEEP = 14, 3
     batches = [
@@ -926,8 +924,8 @@ def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
     keys = ["event_type", "bucket"]
 
     def run(root, retention):
-        m = SketchStateMaintainer(str(root), builder, keys,
-                                  retention=retention)
+        m = StateMaintainer(str(root), sketch_apply(builder, keys),
+                            retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
         return m
@@ -961,7 +959,8 @@ def test_topk_maintenance_streamed_equals_batch_and_idempotent(
         advance_topk_state,
         topk_state,
     )
-    from hbase_snapshotter_spark.streaming.topk_stream import maintain_topk
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.topk_stream import topk_apply
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     src = spark.read.parquet(event_stream_dir) \
@@ -975,8 +974,8 @@ def test_topk_maintenance_streamed_equals_batch_and_idempotent(
         stream = replay_stream(spark, event_stream_dir, src.schema,
                                max_files_per_trigger=1) \
             .filter(F.col("value").isNotNull())
-        q, m = maintain_topk(
-            stream, state_dir, **kw,
+        q, m = maintain_state(
+            stream, state_dir, topk_apply(**kw),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
@@ -1006,11 +1005,13 @@ def test_streamed_sessionization_equals_batch(spark, event_stream_dir,
     session_intervals(all events) and the derived economics equals
     session_stats(all events).  A full re-delivery changes nothing."""
     from hbase_snapshotter_spark.operators.timeseries import (
+        session_economics,
         session_intervals,
         session_stats,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.session_stream import (
-        maintain_sessions,
+        session_apply,
     )
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
@@ -1028,19 +1029,20 @@ def test_streamed_sessionization_equals_batch(spark, event_stream_dir,
     def run(ckpt):
         stream = replay_stream(spark, event_stream_dir, src.schema,
                                max_files_per_trigger=1)
-        q, m = maintain_sessions(
-            stream, state_dir, key_col="user_id", ts_col="ts",
-            id_col="event_id", gap_ms=GAP_MS,
+        q, m = maintain_state(
+            stream, state_dir, session_apply(
+                key_col="user_id", ts_col="ts", id_col="event_id",
+                gap_ms=GAP_MS),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("sess_ckpt1")
     assert rows(m.state(spark)) == want_state
-    assert rows(m.economics(spark)) == want_econ
+    assert rows(session_economics(m.state(spark))) == want_econ
     m2 = run("sess_ckpt2")  # full re-delivery: merge must not re-apply
     assert rows(m2.state(spark)) == want_state
-    assert rows(m2.economics(spark)) == want_econ
+    assert rows(session_economics(m2.state(spark))) == want_econ
 
 
 def test_session_state_retention_bounds_dirs(spark, tmp_path):
@@ -1049,8 +1051,9 @@ def test_session_state_retention_bounds_dirs(spark, tmp_path):
     equals the unbounded run's."""
     import os
 
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
     from hbase_snapshotter_spark.streaming.session_stream import (
-        SessionStateMaintainer,
+        session_apply,
     )
 
     N, KEEP = 12, 3
@@ -1063,9 +1066,10 @@ def test_session_state_retention_bounds_dirs(spark, tmp_path):
         for i in range(N)]
 
     def run(root, retention):
-        m = SessionStateMaintainer(
-            str(root), key_col="k", ts_col="ts", id_col="eid",
-            gap_ms=10 * 60000, retention=retention)
+        m = StateMaintainer(
+            str(root), session_apply(key_col="k", ts_col="ts", id_col="eid",
+                                     gap_ms=10 * 60000),
+            retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
         return m
@@ -1172,10 +1176,10 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         pq_encode,
     )
     from hbase_snapshotter_spark.streaming.index_stream import (
-        IndexFeedMaintainer,
         bm25_feed_apply,
         pq_feed_apply,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     rows_of = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
 
@@ -1191,7 +1195,7 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         spark.createDataFrame(
             [("D", 5, None), ("U", 1, "orange fox")], fs),
     ]
-    m = IndexFeedMaintainer(str(tmp_path / "bm25"), bm25_feed_apply())
+    m = StateMaintainer(str(tmp_path / "bm25"), bm25_feed_apply())
     for i, f in enumerate(feeds):
         m.process_batch(f, i)
     net = spark.createDataFrame(
@@ -1218,7 +1222,7 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         .unionByName(tag(vec(8), "I")),
         tag(vec(8), "D"),
     ]
-    mp = IndexFeedMaintainer(str(tmp_path / "pq"), pq_feed_apply(C))
+    mp = StateMaintainer(str(tmp_path / "pq"), pq_feed_apply(C))
     for i, f in enumerate(pq_feeds):
         mp.process_batch(f, i)
     net_corpus = emb.filter("vec_id < 6 and vec_id not in (2, 3)") \
@@ -1240,8 +1244,9 @@ def test_frontier_maintenance_equals_batch(spark, event_stream_dir,
 
     from hbase_snapshotter_spark.operators.sampling import pareto_frontier
     from hbase_snapshotter_spark.streaming.frontier_stream import (
-        maintain_frontier,
+        frontier_apply,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     src = spark.read.parquet(event_stream_dir)
@@ -1258,8 +1263,8 @@ def test_frontier_maintenance_equals_batch(spark, event_stream_dir,
     def run(ckpt):
         stream = replay_stream(spark, event_stream_dir, src.schema,
                                max_files_per_trigger=1)
-        q, m = maintain_frontier(
-            axes(stream), state_dir, **kw,
+        q, m = maintain_state(
+            axes(stream), state_dir, frontier_apply(**kw),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
@@ -1336,8 +1341,9 @@ def test_frontier_retention_bounds_dirs(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.streaming.frontier_stream import (
-        FrontierStateMaintainer,
+        frontier_apply,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     N, KEEP = 12, 3
     batches = [
@@ -1350,7 +1356,8 @@ def test_frontier_retention_bounds_dirs(spark, tmp_path):
               id_col="doc_id")
 
     def run(root, retention):
-        m = FrontierStateMaintainer(str(root), retention=retention, **kw)
+        m = StateMaintainer(str(root), frontier_apply(**kw),
+                            retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
         return m
@@ -1381,9 +1388,9 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
         shared_shingle_edges,
     )
     from hbase_snapshotter_spark.streaming.index_stream import (
-        IndexFeedMaintainer,
         graph_feed_apply,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     base = "alpha beta gamma delta epsilon zeta"
     fs = "op string, doc_id long, text string"
@@ -1401,7 +1408,7 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
         spark.createDataFrame([("D", 9, None)], fs),
     ]
     cap, ms = 4, 2
-    m = IndexFeedMaintainer(
+    m = StateMaintainer(
         str(tmp_path / "graph"),
         graph_feed_apply(min_shared=ms, max_df=cap))
     for i, f in enumerate(feeds):
