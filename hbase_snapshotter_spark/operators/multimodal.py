@@ -238,11 +238,8 @@ FRAME_SAMPLE_CAP = 8
 #: codecs need only ~50-100 us/row — so a few-thousand-row fixture
 #: input wants a handful of fat tasks, not one per core.  Production
 #: inputs arrive in many file splits, where spread() is a no-op and the
-#: split size (maxPartitionBytes) governs instead.  Env-overridable so
-#: a cluster profile can retune without a code change.
-import os as _os
-
-CODEC_SPREAD_CAP = int(_os.environ.get("SPARK_GRAFT_CODEC_TASKS", "8"))
+#: split size (maxPartitionBytes) governs instead.
+CODEC_SPREAD_CAP = 8
 
 
 def sample_frames(df: DataFrame, *, max_frames: int = FRAME_SAMPLE_CAP,

@@ -43,6 +43,13 @@ from hbase_snapshotter_spark.plans.schema import (
     STATUS_COLUMN,
 )
 
+#: The key of a change-log cell: HBase row, column family and qualifier.
+CELL_KEY = ("row_key", "family", "qualifier")
+
+#: The cell key of the single-family operators (SCD2 history,
+#: changefeed): row and qualifier.
+QUALIFIER_KEY = ("row_key", "qualifier")
+
 
 def decode_expr(col: Column, dtype: DataType, *, strict: bool = False) -> Column:
     """Stringified cell value → typed column (``transformMapToRow``,
@@ -77,7 +84,7 @@ def decode_expr(col: Column, dtype: DataType, *, strict: bool = False) -> Column
     return decoded
 
 
-def as_of(changelog: DataFrame, ts: int | None, *, ts_col: str = "cell_ts") -> DataFrame:
+def as_of(changelog: DataFrame, ts: int | None) -> DataFrame:
     """Time-range predicate ``[0, ts]``; ``ts`` < 0 / ``None`` = "now".
 
     Deliberate divergence from the reference: HBase's
@@ -89,16 +96,14 @@ def as_of(changelog: DataFrame, ts: int | None, *, ts_col: str = "cell_ts") -> D
     semantics pass ``ts - 1``."""
     if ts is None or ts < 0:
         return changelog
-    return changelog.filter(F.col(ts_col) <= F.lit(ts))
+    return changelog.filter(F.col("cell_ts") <= F.lit(ts))
 
 
 def latest_cells(
     changelog: DataFrame,
     ts: int | None = None,
     *,
-    key_cols: tuple[str, ...] = ("row_key", "family", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
+    key_cols: tuple[str, ...] = CELL_KEY,
 ) -> DataFrame:
     """Latest version ≤ ts of every cell — HBase per-CELL visibility
     (a reconstructed row may mix cell versions; pinned by fixtures).
@@ -112,15 +117,15 @@ def latest_cells(
     shuffle-volume bound are identical to the hash form; no sort of the
     FULL history by any window key ever happens.)
     """
-    agg = F.max(F.struct(F.col(ts_col), F.col(value_col))).alias("__latest")
+    agg = F.max(F.struct(F.col("cell_ts"), F.col("value"))).alias("__latest")
     return (
-        as_of(changelog, ts, ts_col=ts_col)
+        as_of(changelog, ts)
         .groupBy(*key_cols)
         .agg(agg)
         .select(
             *key_cols,
-            F.col(f"__latest.{value_col}").alias(value_col),
-            F.col(f"__latest.{ts_col}").alias(ts_col),
+            F.col("__latest.value").alias("value"),
+            F.col("__latest.cell_ts").alias("cell_ts"),
         )
     )
 
@@ -153,10 +158,6 @@ def advance_latest_cells(
     prev_cells: DataFrame,
     delta_log: DataFrame,
     ts: int | None = None,
-    *,
-    key_cols: tuple[str, ...] = ("row_key", "family", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Incremental snapshot maintenance — the 100 TB upgrade over the
     reference's full-rescan pipeline (`HBaseSnapshotter.scala:123-137`
@@ -187,21 +188,12 @@ def advance_latest_cells(
     ∝ touched buckets — measured proportional in SCALE.md.  The
     registered ``snapshot_diff`` query folds the equality above into
     its driver hash (``incremental_consistent``)."""
-    cols = [*key_cols, value_col, ts_col]
-    delta = as_of(delta_log, ts, ts_col=ts_col).select(*cols)
-    return latest_cells(
-        prev_cells.select(*cols).unionByName(delta), None,
-        key_cols=key_cols, ts_col=ts_col, value_col=value_col)
+    cols = [*CELL_KEY, "value", "cell_ts"]
+    delta = as_of(delta_log, ts).select(*cols)
+    return latest_cells(prev_cells.select(*cols).unionByName(delta), None)
 
 
-def latest_cells_multi(
-    changelog: DataFrame,
-    timestamps: list[int],
-    *,
-    key_cols: tuple[str, ...] = ("row_key", "family", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
-) -> DataFrame:
+def latest_cells_multi(changelog: DataFrame, timestamps: list[int]) -> DataFrame:
     """Latest cell version at EACH of N snapshot timestamps, in one scan
     and one shuffle — batch time travel.
 
@@ -212,12 +204,12 @@ def latest_cells_multi(
     Output adds a leading ``snapshot_ts`` column.
     """
     ts_arr = F.array(*[F.lit(int(t)) for t in sorted(timestamps)])
+    visible = F.filter(ts_arr, lambda t: F.col("cell_ts") <= t)
     fanned = changelog.select(
-        F.explode(F.filter(ts_arr, lambda t: F.col(ts_col) <= t)).alias("snapshot_ts"),
+        F.explode(visible).alias("snapshot_ts"),
         *[F.col(c) for c in changelog.columns],
     )
-    return latest_cells(fanned, None, key_cols=("snapshot_ts", *key_cols),
-                        ts_col=ts_col, value_col=value_col)
+    return latest_cells(fanned, None, key_cols=("snapshot_ts", *CELL_KEY))
 
 
 def snapshot_as_of(
@@ -292,18 +284,7 @@ def snapshot_as_of(
     return pivoted.select(*out)
 
 
-def compact_cells(
-    cells: DataFrame,
-    *,
-    horizon_ts: int,
-    ttl_cutoff_ts: int,
-    key_col: str = "row_key",
-    qualifier_col: str = "qualifier",
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
-    status_qualifier: str = "row_status",
-    delete_marker: str = "D",
-) -> DataFrame:
+def compact_cells(cells: DataFrame, *, horizon_ts: int, ttl_cutoff_ts: int) -> DataFrame:
     """Major-compaction classification of a latest-cells state (N40) —
     the retention half the reference leaves to HBase itself: its
     replicator writes ``d:row_status`` delete markers
@@ -316,16 +297,16 @@ def compact_cells(
 
     Every input cell comes back with ``row_deleted`` and a ``cell_fate``:
 
-    - ``deleted`` — the row's ``row_status`` cell is ``delete_marker``
-      with ``cell_ts <= horizon_ts`` (the tombstone is old enough that
-      no snapshot newer than the horizon can resurrect the row), so ALL
-      the row's cells are collectible, marker included;
+    - ``deleted`` — the row's ``row_status`` cell is the delete marker
+      ``D`` with ``cell_ts <= horizon_ts`` (the tombstone is old enough
+      that no snapshot newer than the horizon can resurrect the row), so
+      ALL the row's cells are collectible, marker included;
     - ``expired``  — not deleted, but ``cell_ts < ttl_cutoff_ts`` (TTL);
     - ``kept``     — everything else.  The compacted state is
       ``filter(cell_fate = 'kept')``.
 
     Scale shape: the tombstone set is a narrow filter of the state
-    itself; classification is ONE left join keyed on ``key_col`` plus
+    itself; classification is ONE left join keyed on ``row_key`` plus
     pure column expressions — no aggregation, no window.  Run against
     the hash-bucket-partitioned state table the join is co-partitioned
     (both sides derive from the same bucket), so compacting N buckets
@@ -333,38 +314,33 @@ def compact_cells(
     partition-pruned advance, and at 100 TB compaction piggybacks on
     the buckets an advance already rewrites."""
     tombstones = (
-        cells.filter((F.col(qualifier_col) == status_qualifier)
-                     & (F.col(value_col) == delete_marker)
-                     & (F.col(ts_col) <= F.lit(horizon_ts)))
+        cells.filter((F.col("qualifier") == "row_status")
+                     & (F.col("value") == "D")
+                     & (F.col("cell_ts") <= F.lit(horizon_ts)))
         # distinct: a raw (non-latest-cells) input can carry several
         # qualifying marker VERSIONS for one key — without the dedup
         # the left join would fan out every cell of that key
-        .select(F.col(key_col)).distinct()
+        .select(F.col("row_key")).distinct()
         .withColumn("__row_deleted", F.lit(True))
     )
     classified = (
-        cells.join(tombstones, key_col, "left")
+        cells.join(tombstones, "row_key", "left")
         .withColumn("row_deleted", F.coalesce("__row_deleted", F.lit(False)))
         .drop("__row_deleted")
     )
     fate = (
         F.when(F.col("row_deleted"), F.lit("deleted"))
-        .when(F.col(ts_col) < F.lit(ttl_cutoff_ts), F.lit("expired"))
+        .when(F.col("cell_ts") < F.lit(ttl_cutoff_ts), F.lit("expired"))
         .otherwise(F.lit("kept"))
     )
     return classified.withColumn("cell_fate", fate)
 
 
-def scd2_history(
-    changelog: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
-) -> DataFrame:
+def scd2_history(changelog: DataFrame) -> DataFrame:
     """SCD2 reconstruction (N49): every cell VERSION with its validity
-    interval — ``(*key_cols, value, valid_from, valid_to, version,
-    is_current)``, ``valid_to`` exclusive and NULL on the live version.
+    interval — ``(row_key, qualifier, value, valid_from, valid_to,
+    version, is_current)``, ``valid_to`` exclusive and NULL on the live
+    version.
 
     The snapshot lane answers "state AT ts" (one version per cell);
     operating a change-captured warehouse also needs "state OVER time"
@@ -379,26 +355,18 @@ def scd2_history(
     versions at one ts) order deterministically by value — the same
     tie-break as :func:`latest_cells` — producing a zero-length
     interval for the shadowed write."""
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]) \
-        .orderBy(F.col(ts_col), F.col(value_col))
+    w = Window.partitionBy(*QUALIFIER_KEY).orderBy("cell_ts", "value")
     return (
-        changelog.select(*key_cols, value_col, ts_col)
-        .withColumn("valid_from", F.col(ts_col))
-        .withColumn("valid_to", F.lead(ts_col).over(w))
+        changelog.select(*QUALIFIER_KEY, "value", "cell_ts")
+        .withColumn("valid_from", F.col("cell_ts"))
+        .withColumn("valid_to", F.lead("cell_ts").over(w))
         .withColumn("version", F.row_number().over(w))
         .withColumn("is_current", F.col("valid_to").isNull())
-        .drop(ts_col)
+        .drop("cell_ts")
     )
 
 
-def advance_scd2(
-    state: DataFrame,
-    delta: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
-) -> DataFrame:
+def advance_scd2(state: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental SCD2 maintenance (N54): advance a materialized
     :func:`scd2_history` table with ONLY the delta change log — the
     SCD2 member of the incremental-state family (N25 latest-cells, N43
@@ -420,7 +388,7 @@ def advance_scd2(
     :mod:`~.snapshot_state` it co-partitions and prunes to touched
     buckets); the re-windowed set is |touched open rows| + |delta| —
     bounded by the delta, not the history."""
-    keys = list(key_cols)
+    keys = list(QUALIFIER_KEY)
     touched = delta.select(*keys).distinct()
     untouched = state.join(touched, keys, "left_anti")
     touched_state = state.join(touched, keys)
@@ -434,15 +402,14 @@ def advance_scd2(
         *keys, F.col("valid_from").alias("__open_from"))
     fresh = (delta.join(open_from, keys, "left")
              .filter(F.col("__open_from").isNull()
-                     | (F.col(ts_col) > F.col("__open_from")))
-             .select(*keys, ts_col, value_col))
+                     | (F.col("cell_ts") > F.col("__open_from")))
+             .select(*keys, "cell_ts", "value"))
     tail_src = (
-        open_rows.select(*keys, F.col("valid_from").alias(ts_col),
-                         F.col(value_col))
+        open_rows.select(*keys, F.col("valid_from").alias("cell_ts"),
+                         F.col("value"))
         .unionByName(fresh)
-        .dropDuplicates([*keys, ts_col, value_col]))
-    tail = scd2_history(tail_src, key_cols=key_cols, ts_col=ts_col,
-                        value_col=value_col)
+        .dropDuplicates([*keys, "cell_ts", "value"]))
+    tail = scd2_history(tail_src)
     base = open_rows.select(*keys, (F.col("version") - 1).alias("__base"))
     renumbered = (
         tail.join(base, keys, "left")
@@ -458,8 +425,7 @@ def state_changefeed(
     state_a: DataFrame,
     state_b: DataFrame,
     *,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    value_col: str = "value",
+    key_cols: tuple[str, ...] = QUALIFIER_KEY,
 ) -> DataFrame:
     """Changefeed generation (N50) — the INVERSE of the reference's
     pipeline: the reference replays a change log into a snapshot; this
@@ -480,9 +446,9 @@ def state_changefeed(
     # nullness would misclassify NULL-valued cells as inserts/deletes
     # and re-emit NULL↔NULL cells forever); value comparison is
     # null-safe for the same reason
-    a = state_a.select(*key_cols, F.col(value_col).alias("__old")) \
+    a = state_a.select(*key_cols, F.col("value").alias("__old")) \
         .withColumn("__in_a", F.lit(True))
-    b = state_b.select(*key_cols, F.col(value_col).alias("__new")) \
+    b = state_b.select(*key_cols, F.col("value").alias("__new")) \
         .withColumn("__in_b", F.lit(True))
     joined = a.join(b, list(key_cols), "full_outer")
     op = (
@@ -499,35 +465,25 @@ def state_changefeed(
     )
 
 
-def aggregate_view(
-    state: DataFrame,
-    *,
-    group_col: str = "qualifier",
-    value_col: str = "value",
-) -> DataFrame:
+def aggregate_view(state: DataFrame) -> DataFrame:
     """Materialized aggregate view over a cell-state table (SURVEY
-    §2.3 N84): per group, the cell count, the numeric-cell count, and
-    the exact 4-dp micro-unit sum — the algebraic aggregates that stay
+    §2.3 N84): per qualifier, the cell count, the numeric-cell count,
+    and the exact 4-dp micro-unit sum — the algebraic aggregates that stay
     maintainable under DELETES (min/max are not: a deleted extremum
     needs history to replace; production recomputes those or keeps
     insert-only).  Sums live in BIGINT micro-units so the incremental
     merge (:func:`advance_aggregate_view`) and the SQL oracle are
     exact — no float accumulation order can split the engines.  One
     hash aggregation with map-side partials; output is group-sized."""
-    num = F.expr(f"try_cast({value_col} as double)")
+    num = F.expr("try_cast(value as double)")
     micro = F.round(num * 10000).cast("long")
-    return state.groupBy(group_col).agg(
+    return state.groupBy("qualifier").agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.count(num).alias("n_numeric"),
         F.coalesce(F.sum(micro), F.lit(0)).cast("long").alias("sum_micro"))
 
 
-def advance_aggregate_view(
-    view: DataFrame,
-    feed: DataFrame,
-    *,
-    group_col: str = "qualifier",
-) -> DataFrame:
+def advance_aggregate_view(view: DataFrame, feed: DataFrame) -> DataFrame:
     """Advance a materialized aggregate view with ONLY a changefeed
     (N50 shape: ``op`` ∈ I/U/D with ``old_value``/``new_value``) — the
     classic incremental-view-maintenance step: inserts add their
@@ -543,23 +499,23 @@ def advance_aggregate_view(
     num_old = F.expr("try_cast(old_value as double)")
     num_new = F.expr("try_cast(new_value as double)")
     rm = feed.filter(F.col("op").isin("D", "U")).select(
-        F.col(group_col),
+        F.col("qualifier"),
         F.lit(-1).cast("long").alias("n_cells"),
         F.when(num_old.isNotNull(), F.lit(-1).cast("long"))
         .otherwise(F.lit(0).cast("long")).alias("n_numeric"),
         F.coalesce(-F.round(num_old * 10000).cast("long"),
                    F.lit(0).cast("long")).alias("sum_micro"))
     ad = feed.filter(F.col("op").isin("I", "U")).select(
-        F.col(group_col),
+        F.col("qualifier"),
         F.lit(1).cast("long").alias("n_cells"),
         F.when(num_new.isNotNull(), F.lit(1).cast("long"))
         .otherwise(F.lit(0).cast("long")).alias("n_numeric"),
         F.coalesce(F.round(num_new * 10000).cast("long"),
                    F.lit(0).cast("long")).alias("sum_micro"))
     return (
-        view.select(group_col, "n_cells", "n_numeric", "sum_micro")
+        view.select("qualifier", "n_cells", "n_numeric", "sum_micro")
         .unionByName(rm).unionByName(ad)
-        .groupBy(group_col)
+        .groupBy("qualifier")
         .agg(F.sum("n_cells").cast("long").alias("n_cells"),
              F.sum("n_numeric").cast("long").alias("n_numeric"),
              F.sum("sum_micro").cast("long").alias("sum_micro"))
@@ -611,17 +567,10 @@ def recompute_affected_groups(
     return kept.unionByName(rebuilt)
 
 
-def scd2_lookup(
-    facts: DataFrame,
-    history: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    fact_ts_col: str = "cell_ts",
-    how: str = "left",
-) -> DataFrame:
+def scd2_lookup(facts: DataFrame, history: DataFrame, *, how: str = "left") -> DataFrame:
     """Temporal dimension lookup (SURVEY §2.3 N99): join each fact row
-    to the :func:`scd2_history` VERSION that was valid at the fact's
-    event time — the Kimball "as-was" join every change-captured
+    to the :func:`scd2_history` VERSION of its ``row_key`` that was
+    valid at the fact's ``cell_ts`` — the Kimball "as-was" join every change-captured
     warehouse serves (`fact JOIN dim ON key AND valid_from <= ts <
     valid_to`), and the interval mirror of the event-pair as-of join
     (N6 `asof_join` picks the latest EVENT ≤ t; this picks the
@@ -632,8 +581,9 @@ def scd2_lookup(
     plans a hash/sort-merge join on the key (broadcast when the
     history is dim-sized, the common case), never a
     BroadcastNestedLoop, because the equality conjunct is extractable.
-    Versions of one key never overlap (`valid_to` = next version's
-    `valid_from`, exclusive), so each fact matches AT MOST one version
+    ``history`` holds one dimension attribute (one qualifier), so
+    versions of one key never overlap (`valid_to` = next version's
+    `valid_from`, exclusive), and each fact matches AT MOST one version
     — no dedup pass needed, and ``how="left"`` keeps facts older than
     their key's first version (dimension columns NULL), the audit
     posture; ``how="inner"`` drops them.
@@ -646,13 +596,11 @@ def scd2_lookup(
     if how not in ("left", "inner"):
         raise ValueError(f"scd2_lookup: how must be left|inner, got {how}")
     h = history.select(
-        *key_cols, F.col("value").alias("dim_value"), "valid_from",
+        "row_key", F.col("value").alias("dim_value"), "valid_from",
         "valid_to", "version", "is_current")
-    ts = F.col(f"__f.{fact_ts_col}")
-    cond = F.lit(True)
-    for c in key_cols:
-        cond = cond & (F.col(f"__f.{c}") == F.col(f"__h.{c}"))
-    cond = cond & (F.col("__h.valid_from") <= ts) \
+    ts = F.col("__f.cell_ts")
+    cond = (F.col("__f.row_key") == F.col("__h.row_key")) \
+        & (F.col("__h.valid_from") <= ts) \
         & (F.col("__h.valid_to").isNull()
            | (ts < F.col("__h.valid_to")))
     out = facts.alias("__f").join(h.alias("__h"), cond, how)
@@ -668,7 +616,6 @@ def bucket_fingerprints(
     state: DataFrame,
     *,
     content_cols: list[str],
-    bucket_key: str = "row_key",
     n_buckets: int = 16,
 ) -> DataFrame:
     """Per-bucket anti-entropy fingerprints (SURVEY §2.3 N117): hash
@@ -688,7 +635,7 @@ def bucket_fingerprints(
     advance (N25) exploits when the delta IS known."""
     content = F.concat_ws("|", *[F.col(c) for c in content_cols])
     fp64 = F.conv(F.substring(F.md5(content), 1, 15), 16, 10).cast("long")
-    bucket = (F.conv(F.substring(F.md5(F.col(bucket_key)), 1, 8), 16, 10)
+    bucket = (F.conv(F.substring(F.md5(F.col("row_key")), 1, 8), 16, 10)
               .cast("long") % n_buckets)
     return (state.select(bucket.alias("bucket"), fp64.alias("__h"))
             .groupBy("bucket")

@@ -57,9 +57,12 @@ from pyspark.sql import functions as F
 
 from hbase_snapshotter_spark.operators.sampling import hash_bucket
 from hbase_snapshotter_spark.operators.snapshot import (
+    CELL_KEY,
+    QUALIFIER_KEY,
     advance_latest_cells,
     advance_scd2,
     as_of,
+    compact_cells,
     latest_cells,
     scd2_history,
 )
@@ -85,11 +88,11 @@ def write_state(
     path: str,
     *,
     n_buckets: int = DEFAULT_STATE_BUCKETS,
-    row_key_col: str = "row_key",
 ) -> None:
     """Materialize a latest-cells state table partitioned by
-    :func:`state_bucket` — the layout every pruned advance relies on."""
-    (cells.withColumn(STATE_BUCKET_COL, state_bucket(row_key_col, n_buckets))
+    :func:`state_bucket` of ``row_key`` — the layout every pruned
+    advance relies on."""
+    (cells.withColumn(STATE_BUCKET_COL, state_bucket("row_key", n_buckets))
      .write.mode("overwrite").partitionBy(STATE_BUCKET_COL).parquet(path))
 
 
@@ -105,16 +108,11 @@ def init_state(
     ts: int | None = None,
     *,
     n_buckets: int = DEFAULT_STATE_BUCKETS,
-    key_cols: tuple[str, ...] = ("row_key", "family", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
 ) -> None:
     """Bootstrap the bucketed state table from a change log: one full
     ``latest_cells`` reduction (the reference's rescan — paid once),
     written in the pruned-advance layout."""
-    cells = latest_cells(changelog, ts, key_cols=key_cols,
-                         ts_col=ts_col, value_col=value_col)
-    write_state(cells, path, n_buckets=n_buckets, row_key_col=key_cols[0])
+    write_state(latest_cells(changelog, ts), path, n_buckets=n_buckets)
 
 
 def advance_state_pruned(
@@ -124,9 +122,6 @@ def advance_state_pruned(
     ts: int | None = None,
     *,
     n_buckets: int = DEFAULT_STATE_BUCKETS,
-    key_cols: tuple[str, ...] = ("row_key", "family", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
     compact: dict | None = None,
 ) -> list[int]:
     """Advance the bucketed state table at ``path`` by ``delta_log``,
@@ -145,7 +140,7 @@ def advance_state_pruned(
     ``compact`` (VERDICT r6 task 5) piggybacks major compaction on the
     same cycle: a dict of
     :func:`~hbase_snapshotter_spark.operators.snapshot.compact_cells`
-    kwargs (``horizon_ts`` and ``ttl_cutoff_ts`` required) applied to
+    kwargs (``horizon_ts`` and ``ttl_cutoff_ts``) applied to
     the merged cells BEFORE the write, keeping only ``cell_fate =
     'kept'`` rows.  Each touched bucket is then read once and written
     once per cycle — there is no second compaction rewrite (measured in
@@ -158,16 +153,12 @@ def advance_state_pruned(
     Fused-path state ≡ advance-then-compact two-step state,
     byte-for-byte (pytest-pinned)."""
     from hbase_snapshotter_spark.cache import scoped_persist
-    from hbase_snapshotter_spark.operators.snapshot import compact_cells
 
-    cols = [*key_cols, value_col, ts_col]
-    row_key_col = key_cols[0]
-    delta = scoped_persist(
-        latest_cells(as_of(delta_log, ts, ts_col=ts_col).select(*cols), None,
-                     key_cols=key_cols, ts_col=ts_col, value_col=value_col))
+    delta = scoped_persist(latest_cells(
+        as_of(delta_log, ts).select(*CELL_KEY, "value", "cell_ts"), None))
     touched = sorted(
         r[0] for r in delta.select(
-            state_bucket(row_key_col, n_buckets).alias("b")).distinct().collect())
+            state_bucket("row_key", n_buckets).alias("b")).distinct().collect())
     if not touched:
         return []
     prev = (
@@ -175,16 +166,14 @@ def advance_state_pruned(
         .filter(F.col(STATE_BUCKET_COL).isin(touched))
         .drop(STATE_BUCKET_COL)
     )
-    merged = advance_latest_cells(prev, delta, None, key_cols=key_cols,
-                                  ts_col=ts_col, value_col=value_col)
+    merged = advance_latest_cells(prev, delta, None)
     if compact is not None:
         merged = (
-            compact_cells(merged, key_col=row_key_col, ts_col=ts_col,
-                          value_col=value_col, **compact)
+            compact_cells(merged, **compact)
             .filter(F.col("cell_fate") == "kept")
             .drop("cell_fate", "row_deleted")
         )
-    (merged.withColumn(STATE_BUCKET_COL, state_bucket(row_key_col, n_buckets))
+    (merged.withColumn(STATE_BUCKET_COL, state_bucket("row_key", n_buckets))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy(STATE_BUCKET_COL).parquet(path))
@@ -196,17 +185,12 @@ def init_scd2_state(
     path: str,
     *,
     n_buckets: int = DEFAULT_STATE_BUCKETS,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
 ) -> None:
     """Bootstrap a bucketed SCD2 history table (N54 scale form): one
     full :func:`~.snapshot.scd2_history` reconstruction — paid once —
     written in the same hash-bucket layout as the latest-cells state,
     so advances prune to delta-touched buckets."""
-    hist = scd2_history(changelog, key_cols=key_cols, ts_col=ts_col,
-                        value_col=value_col)
-    write_state(hist, path, n_buckets=n_buckets, row_key_col=key_cols[0])
+    write_state(scd2_history(changelog), path, n_buckets=n_buckets)
 
 
 def advance_scd2_pruned(
@@ -215,9 +199,6 @@ def advance_scd2_pruned(
     delta_log: DataFrame,
     *,
     n_buckets: int = DEFAULT_STATE_BUCKETS,
-    key_cols: tuple[str, ...] = ("row_key", "qualifier"),
-    ts_col: str = "cell_ts",
-    value_col: str = "value",
 ) -> list[int]:
     """Advance a bucketed SCD2 history table by ``delta_log``, reading
     and rewriting ONLY the delta-touched buckets (VERDICT r6 task 6 —
@@ -238,13 +219,11 @@ def advance_scd2_pruned(
     (mtime-pinned), and re-delivered deltas are no-ops end-to-end."""
     from hbase_snapshotter_spark.cache import scoped_persist
 
-    row_key_col = key_cols[0]
-    delta = scoped_persist(
-        delta_log.select(*key_cols, ts_col, value_col)
-        .dropDuplicates([*key_cols, ts_col, value_col]))
+    cols = [*QUALIFIER_KEY, "cell_ts", "value"]
+    delta = scoped_persist(delta_log.select(*cols).dropDuplicates(cols))
     touched = sorted(
         r[0] for r in delta.select(
-            state_bucket(row_key_col, n_buckets).alias("b")).distinct().collect())
+            state_bucket("row_key", n_buckets).alias("b")).distinct().collect())
     if not touched:
         return []
     prev = (
@@ -252,9 +231,8 @@ def advance_scd2_pruned(
         .filter(F.col(STATE_BUCKET_COL).isin(touched))
         .drop(STATE_BUCKET_COL)
     )
-    merged = advance_scd2(prev, delta, key_cols=key_cols, ts_col=ts_col,
-                          value_col=value_col)
-    (merged.withColumn(STATE_BUCKET_COL, state_bucket(row_key_col, n_buckets))
+    merged = advance_scd2(prev, delta)
+    (merged.withColumn(STATE_BUCKET_COL, state_bucket("row_key", n_buckets))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy(STATE_BUCKET_COL).parquet(path))

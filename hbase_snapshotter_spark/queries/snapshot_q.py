@@ -1176,8 +1176,7 @@ def q_scd2_lookup_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts = (log.filter(F.col("qualifier") == "purchase")
              .select("row_key", "cell_ts",
                      F.col("value").alias("fact_value")))
-    return scd2_lookup(facts, dim, key_cols=("row_key",),
-                       fact_ts_col="cell_ts")
+    return scd2_lookup(facts, dim)
 
 
 def oracle_scd2_lookup_purchases() -> str:

@@ -81,15 +81,21 @@ def read_table(
 
 def region_files(path: str) -> list[str]:
     """The region files of a region-split change log, sorted: every
-    ``*.parquet`` file under a directory, at any depth, or else the files
-    ``path`` matches as a glob.  Under a directory, a path part starting
-    with ``_`` or ``.`` is skipped, as Spark does (``_SUCCESS``,
-    ``.crc`` files, ``_temporary/``).  Empty when nothing matches."""
-    if not os.path.isdir(path):
-        return sorted(glob.glob(path))
-    found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    return sorted(f for f in found if not any(
-        part.startswith(("_", ".")) for part in os.path.relpath(f, path).split(os.sep)))
+    ``*.parquet`` file under a directory, at any depth, or else each file
+    that ``path`` matches as a glob and the same listing of each
+    directory it matches (so ``log/dt=2020-*`` picks a date range of a
+    ``partitionBy("dt")`` log).  Under a directory, a path part starting
+    with ``_`` or ``.`` is skipped, as Spark does (``_SUCCESS``, ``.crc``
+    files, ``_temporary/``).  Empty when nothing matches."""
+    files = []
+    for root in [path] if os.path.isdir(path) else glob.glob(path):
+        if not os.path.isdir(root):
+            files.append(root)
+            continue
+        found = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        files += [f for f in found if not any(
+            part.startswith(("_", ".")) for part in os.path.relpath(f, root).split(os.sep))]
+    return sorted(files)
 
 
 def _region_overlaps(path: str, hi: float) -> bool:

@@ -3,6 +3,7 @@ job (config → schema → snapshot → warehouse table), mirroring the
 reference's entry path (Settings.scala, HBaseSnapshotter.main)."""
 
 import datetime
+import glob
 import json
 import os
 import re
@@ -348,6 +349,23 @@ def test_partitioned_log_reads_like_flat_layout(spark, changelog, schema_history
     finally:
         spark.sql("DROP TABLE IF EXISTS snap_flat")
         spark.sql("DROP TABLE IF EXISTS snap_nested")
+
+
+def test_region_glob_over_partition_dirs_reads_like_the_dir(spark, changelog, tmp_path):
+    """A glob that matches partition directories (``log/dt=*``) lists
+    their region files the way a directory path does, instead of handing
+    the directories themselves to the footer read."""
+    from pyspark.sql import functions as F
+
+    log = str(tmp_path / "log")
+    changelog.withColumn("dt", F.expr("date_add(DATE'2020-01-01', cast(cell_ts div 1000 as int))")) \
+        .write.partitionBy("dt").parquet(log)
+    assert len(glob.glob(os.path.join(log, "dt=*"))) > 1
+
+    def rows(path):
+        return sorted(map(tuple, read_regions(spark, path, T2).collect()))
+
+    assert rows(os.path.join(log, "dt=*")) == rows(log)
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "changelog"])

@@ -768,8 +768,7 @@ def test_scd2_lookup_as_was_semantics(spark):
          ("u1", 999, "d"),   # open interval → pro v2, is_current
          ("u2", 151, "e")],
         "row_key string, cell_ts long, fact_value string")
-    out = scd2_lookup(facts, hist, key_cols=("row_key",),
-                      fact_ts_col="cell_ts")
+    out = scd2_lookup(facts, hist)
     got = {r.fact_value: (r.dim_value, r.dim_version, r.dim_is_current)
            for r in out.collect()}
     assert out.count() == 5  # at most one version per fact
@@ -778,8 +777,7 @@ def test_scd2_lookup_as_was_semantics(spark):
                    "c": ("pro", 2, True),
                    "d": ("pro", 2, True),
                    "e": ("pro", 1, True)}
-    inner = scd2_lookup(facts, hist, key_cols=("row_key",),
-                        fact_ts_col="cell_ts", how="inner")
+    inner = scd2_lookup(facts, hist, how="inner")
     assert {r.fact_value for r in inner.collect()} == {"b", "c", "d", "e"}
 
 
