@@ -5,8 +5,8 @@ The flagship pipeline — the reference's whole reason to exist
 DataFrame DAG:
 
     read change log → filter(cell_ts <= ts)          # S2, Parquet-pushed
-      → latest version per CELL                      # HBase VERSIONS semantics
-      → pivot qualifiers into columns                # row materialization
+      → one aggregation per row key: the latest      # HBase VERSIONS semantics
+        version of each schema cell in its own slot  # + row materialization
       → typed decode with NULL sentinel              # S7/S8
       → k_hbase_row_key / k_replicator_row_status    # S9/S10
 
@@ -22,11 +22,10 @@ Scale design (100 TB):
   Catalyst pushes into the Parquet scan (row-group min/max pruning) —
   same effect as the reference's server-side ``Scan.setTimeRange``
   (HBaseSnapshotter.scala:124).
-- Latest-per-cell (:func:`latest_cells`) and the pivot are two
-  aggregations, each with partial aggregation map-side before its
-  shuffle, so shuffle volume is ~one row per live cell per partition,
-  not the raw change volume.  No window sort is needed anywhere on this
-  path.
+- The snapshot is one ``groupBy(row_key)`` aggregation with a map-side
+  partial before its one shuffle, so shuffle volume is ~one row per
+  live row key per partition, not the raw change volume nor one row per
+  cell.  No window sort is needed anywhere on this path.
 - All decode logic is column expressions → whole-stage codegen; there is
   no Python on the data path.
 """
@@ -226,48 +225,56 @@ def snapshot_as_of(
     ``StructType`` with per-field cell bindings in metadata (from
     ``plans.schema``).  Columns present in the schema but absent from
     the log resolve to NULL; cells in the log but not in the schema
-    (columns added after ts) are simply not pivoted — schema drift both
+    (columns added after ts) are simply not read — schema drift both
     ways is handled.
 
-    Two-stage aggregation, both with map-side partials:
-
-    1. latest-per-cell: plain ``groupBy(key, family, qualifier)
-       .agg(max(struct(ts, value)))`` — the hot stage, one narrow
-       expression per row;
-    2. row materialization: pivot over the already-reduced cells (one
-       row per live cell) with a trivial ``first`` aggregate.
-
-    The fused single-shuffle form (``groupBy(key).pivot(cell)
-    .agg(max(struct))``) was measured 7× slower at 10M cells: PivotFirst
-    evaluates every pivot slot per input row, so its per-row CPU dwarfs
-    the second (live-cell-sized) shuffle this version adds.  Cells not
-    named by the schema are filtered out before stage 1 — the scan-side
-    projection the reference did with ``Scan.addColumn``.
+    One ``groupBy(row_key)`` aggregation: every schema cell gets a slot
+    ``max(when(__i == k, __s))``, where a projection before the
+    aggregation computes, once per change row, the cell's 1-based slot
+    ``__i`` from its ``(family, qualifier)`` and ``__s = struct(cell_ts,
+    value)``.  Each slot is the :func:`latest_cells` aggregate with the
+    same tie-break (at equal ``cell_ts`` the larger value wins), so the
+    map-side partial folds all cells of a key into one row before the
+    only shuffle, ``hashpartitioning(row_key)``.  The projection is
+    codegen'd; the (uncompiled) SortAggregate then only compares ints.
+    Without the projection (the cell test inside the aggregate) a deep
+    history ran slower than two aggregations (latest per cell, then a
+    pivot of the reduced cells) — SCALE.md has the measurements.
+    Cells not named by the schema are filtered out before the
+    aggregation — the scan-side projection the reference did with
+    ``Scan.addColumn``.
     """
-    data_fields = [f for f in schema.fields if f.metadata.get("qualifier")]
-    cells = [f"{f.metadata.get('family', DEFAULT_FAMILY)}:{f.metadata['qualifier']}"
-             for f in data_fields]
+    def cell(f) -> tuple[str, str]:
+        return f.metadata.get("family", DEFAULT_FAMILY), f.metadata["qualifier"]
 
-    fam_quals: dict[str, list[str]] = {}
-    for f in data_fields:
-        fam_quals.setdefault(f.metadata.get("family", DEFAULT_FAMILY), []) \
-            .append(f.metadata["qualifier"])
-    keep = None
-    for fam, quals in fam_quals.items():
-        cond = (F.col("family") == fam) & F.col("qualifier").isin(quals)
-        keep = cond if keep is None else (keep | cond)
-    if keep is None:
+    # 1-based aggregation slot of every cell the schema binds
+    bound = dict.fromkeys(cell(f) for f in schema.fields if f.metadata.get("qualifier"))
+    slots = {c: k for k, c in enumerate(bound, 1)}
+    if not slots:
         raise ValueError(
             "schema binds no cells: no field carries a family/qualifier "
             "binding (explicit_schema([]) or a schema of synthetic columns "
             "only) — nothing to snapshot")
 
-    pivoted = (
-        latest_cells(as_of(changelog, ts).filter(keep))
-        .withColumn("__cell", F.concat_ws(":", "family", "qualifier"))
+    fam_quals: dict[str, list[str]] = {}
+    for fam, qual in slots:
+        fam_quals.setdefault(fam, []).append(qual)
+    keep = None
+    for fam, quals in fam_quals.items():
+        cond = (F.col("family") == fam) & F.col("qualifier").isin(quals)
+        keep = cond if keep is None else (keep | cond)
+    slot = None
+    for (fam, qual), k in slots.items():
+        hit = (F.col("family") == fam) & (F.col("qualifier") == qual)
+        slot = F.when(hit, k) if slot is None else slot.when(hit, k)
+
+    rows = (
+        as_of(changelog, ts).filter(keep)
+        .select("row_key", slot.alias("__i"),
+                F.struct("cell_ts", "value").alias("__s"))
         .groupBy("row_key")
-        .pivot("__cell", list(dict.fromkeys(cells)))
-        .agg(F.first("value"))
+        .agg(*[F.max(F.when(F.col("__i") == k, F.col("__s"))).alias(f"__c{k}")
+               for k in slots.values()])
     )
 
     out: list[Column] = []
@@ -275,13 +282,12 @@ def snapshot_as_of(
         if f.metadata.get("key"):
             out.append(F.col("row_key").alias(KEY_COLUMN))
             continue
-        cell = f"{f.metadata.get('family', DEFAULT_FAMILY)}:{f.metadata['qualifier']}"
-        raw = F.col(f"`{cell}`")
+        raw = F.col(f"__c{slots[cell(f)]}.value")
         if f.metadata.get("status"):
             out.append(raw.alias(STATUS_COLUMN))
         else:
             out.append(decode_expr(raw, f.dataType, strict=strict_decode).alias(f.name))
-    return pivoted.select(*out)
+    return rows.select(*out)
 
 
 def compact_cells(cells: DataFrame, *, horizon_ts: int, ttl_cutoff_ts: int) -> DataFrame:

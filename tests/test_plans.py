@@ -35,6 +35,11 @@ def explain(spark, name, sf_dir):
     )
 
 
+def exchange_args(plan: str) -> list[str]:
+    """The partitioning of every Exchange in a formatted plan."""
+    return re.findall(r"\(\d+\) Exchange\s*\nInput .*\nArguments: (.*)", plan)
+
+
 def pushed_filters(plan: str) -> str:
     return " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
 
@@ -70,13 +75,13 @@ def test_snapshot_time_range_pushed_to_scan(spark, sf_dir):
     assert re.search(r"LessThan\(ts,(\d+|[\d:T.\-]+)\)", pushed_filters(plan))
 
 
-def test_snapshot_is_two_light_shuffles(spark, sf_dir):
-    """Latest-per-cell agg + pivot over reduced cells — two exchanges,
-    both carrying live-cell volume (the fused one-shuffle pivot form was
-    measured 7x slower; see operators.snapshot docstring)."""
+def test_snapshot_is_one_shuffle(spark, sf_dir):
+    """Latest cell and row layout are one row_key aggregation: a single
+    exchange, hashed on row_key, after the map-side partial has folded
+    every cell of a key into one row (see operators.snapshot docstring)."""
     plan = explain(spark, "snapshot_events_wide", sf_dir)
-    n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert n_exchange == 2
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    assert exchange_args(plan)[0].startswith("hashpartitioning(row_key#")
 
 
 def test_semi_anti_join_strategies(spark, sf_dir):
@@ -187,12 +192,13 @@ def test_sample_split_shuffle_inventory(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_schema_history_snapshot_two_light_shuffles(spark, sf_dir):
-    """The full schema pipeline keeps the flagship's two-exchange shape:
+def test_schema_history_snapshot_one_shuffle(spark, sf_dir):
+    """The full schema pipeline keeps the flagship's one-exchange shape:
     schema resolution is driver-side (one tiny TakeOrdered job), the
-    data path is latest-per-cell agg + pivot over reduced cells."""
+    data path is one row_key aggregation of the latest cells."""
     plan = explain(spark, "schema_history_snapshot", sf_dir)
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    assert exchange_args(plan)[0].startswith("hashpartitioning(row_key#")
     assert "Window" not in plan
 
 

@@ -138,12 +138,82 @@ def test_latest_per_key(spark):
     assert out == {"a": "y", "b": "z"}
 
 
-def test_snapshot_plan_is_two_light_shuffles(changelog, schema_history):
+def test_snapshot_plan_is_one_shuffle(changelog, schema_history):
     schema = schema_as_of(schema_history, T2)
     plan = snapshot_as_of(changelog, schema, T2)._jdf.queryExecution().executedPlan().toString()
-    # stage 1 shuffles by (key, family, qualifier), stage 2 pivots the
-    # reduced cells by key — both live-cell-sized (see operator docstring)
-    assert plan.count("Exchange") == 2
+    # latest cell and row layout are one row_key aggregation whose
+    # map-side partial folds a key's cells into one row before the only
+    # shuffle (see operator docstring)
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(row_key#" in plan
+
+
+def test_snapshot_equals_latest_cells_row_assembly(spark):
+    """``snapshot_as_of`` (one row_key aggregation) equals the latest
+    cells laid out row by row in Python: equal-ts versions keep the
+    larger value, sentinels and SQL NULLs decode to NULL, a second
+    family binds its own cell, unbound cells and an unlogged schema
+    column are handled, and a ts before every cell gives no rows."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    log = spark.createDataFrame(
+        [("k1", "d", "row_status", "I", 100),
+         ("k1", "d", "x", "5", 100),
+         ("k1", "d", "x", "10", 200),
+         ("k1", "d", "x", "9", 200),             # equal ts: larger value wins
+         ("k1", "e", "y", "hello", 100),          # second family binding
+         ("k1", "d", "y", "wrong-family", 150),   # d:y is not bound
+         ("k2", "d", "row_status", "I", 100),
+         ("k2", "d", "x", "NULL", 100),
+         ("k2", "e", "y", "null", 100),
+         ("k2", "d", "name", "bob", 50),
+         ("k2", "d", "name", None, 100),          # SQL NULL is the latest
+         ("k3", "d", "unbound", "z", 100),        # no bound cell: no row
+         ("k4", "d", "x", "12", 300)],
+        "row_key string, family string, qualifier string, value string, cell_ts long",
+    )
+    cols = [("d", "row_status", StringType()), ("d", "x", LongType()),
+            ("e", "y", StringType()), ("d", "name", StringType()),
+            ("d", "absent", DoubleType())]      # never logged
+    schema = StructType(
+        [StructField(KEY_COLUMN, StringType(), False, {"key": True})]
+        + [StructField(STATUS_COLUMN if q == "row_status" else q, t, True,
+                       {"family": fam, "qualifier": q, "status": q == "row_status"})
+           for fam, q, t in cols])
+    py_type = {LongType(): int, StringType(): str, DoubleType(): float}
+
+    def reference(ts):
+        latest: dict = {}
+        for r in latest_cells(log, ts).collect():
+            latest.setdefault(r.row_key, {})[(r.family, r.qualifier)] = r.value
+        rows = []
+        for key, got in latest.items():
+            if not got.keys() & {(fam, q) for fam, q, _ in cols}:
+                continue
+            row = [key]
+            for fam, q, t in cols:
+                v = got.get((fam, q))
+                if q != "row_status" and v is not None:
+                    v = None if v.upper() == "NULL" else py_type[t](v)
+                row.append(v)
+            rows.append(tuple(row))
+        return sorted(rows)
+
+    for ts in (None, 150, 10):
+        out = snapshot_as_of(log, schema, ts)
+        assert out.columns == schema.fieldNames()
+        assert [(f.dataType, f.nullable) for f in out.schema.fields] == \
+            [(f.dataType, True) for f in schema.fields]
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == reference(ts)
+        assert bool(got) == (ts != 10)
+    assert by_key(snapshot_as_of(log, schema, None))["k1"]["x"] == 9
+
+    bad = log.union(spark.createDataFrame(
+        [("k5", "d", "x", "not-a-long", 100)], log.schema))
+    assert by_key(snapshot_as_of(bad, schema, None))["k5"]["x"] is None
+    with pytest.raises(Exception, match="cannot decode|USER_RAISED|CAST_INVALID"):
+        snapshot_as_of(bad, schema, None, strict_decode=True).collect()
 
 
 def test_strict_decode_fails_on_malformed(spark, schema_history):
