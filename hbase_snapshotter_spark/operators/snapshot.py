@@ -5,8 +5,8 @@ The flagship pipeline — the reference's whole reason to exist
 DataFrame DAG:
 
     read change log → filter(cell_ts <= ts)          # S2, Parquet-pushed
-      → one aggregation per row key: the latest      # HBase VERSIONS semantics
-        version of each schema cell in its own slot  # + row materialization
+      → one shuffle on row_key; latest version of    # HBase VERSIONS semantics
+        each schema cell, then one row per key       # + row materialization
       → typed decode with NULL sentinel              # S7/S8
       → k_hbase_row_key / k_replicator_row_status    # S9/S10
 
@@ -22,10 +22,11 @@ Scale design (100 TB):
   Catalyst pushes into the Parquet scan (row-group min/max pruning) —
   same effect as the reference's server-side ``Scan.setTimeRange``
   (HBaseSnapshotter.scala:124).
-- The snapshot is one ``groupBy(row_key)`` aggregation with a map-side
-  partial before its one shuffle, so shuffle volume is ~one row per
-  live row key per partition, not the raw change volume nor one row per
-  cell.  No window sort is needed anywhere on this path.
+- The snapshot has one shuffle, on ``row_key``, of the schema's cells
+  at or before ts; the latest-cell aggregation and the row layout both
+  run inside its partitions.  The work per change row does not grow
+  with the schema width, and a key holds at most one entry per live
+  cell in memory.  No window sort is needed anywhere on this path.
 - All decode logic is column expressions → whole-stage codegen; there is
   no Python on the data path.
 """
@@ -228,53 +229,65 @@ def snapshot_as_of(
     (columns added after ts) are simply not read — schema drift both
     ways is handled.
 
-    One ``groupBy(row_key)`` aggregation: every schema cell gets a slot
-    ``max(when(__i == k, __s))``, where a projection before the
-    aggregation computes, once per change row, the cell's 1-based slot
-    ``__i`` from its ``(family, qualifier)`` and ``__s = struct(cell_ts,
-    value)``.  Each slot is the :func:`latest_cells` aggregate with the
-    same tie-break (at equal ``cell_ts`` the larger value wins), so the
-    map-side partial folds all cells of a key into one row before the
-    only shuffle, ``hashpartitioning(row_key)``.  The projection is
-    codegen'd; the (uncompiled) SortAggregate then only compares ints.
-    Without the projection (the cell test inside the aggregate) a deep
-    history ran slower than two aggregations (latest per cell, then a
-    pivot of the reduced cells) — SCALE.md has the measurements.
-    Cells not named by the schema are filtered out before the
-    aggregation — the scan-side projection the reference did with
-    ``Scan.addColumn``.
-    """
-    def cell(f) -> tuple[str, str]:
-        return f.metadata.get("family", DEFAULT_FAMILY), f.metadata["qualifier"]
+    One shuffle, ``repartition(row_key)`` of the projected change rows
+    ``(row_key, cell = "family:qualifier", value, cell_ts)``; both
+    aggregations after it are keyed by ``row_key`` (plus the cell), so
+    that partitioning serves them and Spark adds no other exchange:
 
-    # 1-based aggregation slot of every cell the schema binds
-    bound = dict.fromkeys(cell(f) for f in schema.fields if f.metadata.get("qualifier"))
-    slots = {c: k for k, c in enumerate(bound, 1)}
-    if not slots:
+    1. :func:`latest_cells` keyed ``(row_key, cell)`` — the latest
+       version of each cell, same tie-break (at equal ``cell_ts`` the
+       larger value wins);
+    2. ``groupBy(row_key)`` collects each key's live cells as two
+       parallel lists (names, values), and every output column looks its
+       cell up there: ``get(values, array_position(names, cell) - 1)``.
+
+    Per change row the cost does not depend on the schema width; each
+    output column costs one scan over the key's live cells, in compiled
+    code.  There is no map-side partial, so the shuffle carries every
+    version at or before ``ts``.  A single ``row_key`` aggregation with
+    one slot per schema cell (``max(when(slot == k, struct(cell_ts,
+    value)))``) keeps that partial, but evaluates every slot for every
+    change row: at 400 columns over a 31-versions-per-cell history it ran
+    6× slower than two shuffles did (SCALE.md).  Cells not named by the
+    schema are filtered
+    out before the shuffle — the scan-side projection the reference did
+    with ``Scan.addColumn``.
+    """
+    def cell(f) -> str:
+        return f"{f.metadata.get('family', DEFAULT_FAMILY)}:{f.metadata['qualifier']}"
+
+    data_fields = [f for f in schema.fields if f.metadata.get("qualifier")]
+    if not data_fields:
         raise ValueError(
             "schema binds no cells: no field carries a family/qualifier "
             "binding (explicit_schema([]) or a schema of synthetic columns "
             "only) — nothing to snapshot")
+    # output column of every cell the schema binds
+    slots = {c: f"__c{k}" for k, c in enumerate(dict.fromkeys(map(cell, data_fields)))}
 
     fam_quals: dict[str, list[str]] = {}
-    for fam, qual in slots:
-        fam_quals.setdefault(fam, []).append(qual)
+    for f in data_fields:
+        fam_quals.setdefault(f.metadata.get("family", DEFAULT_FAMILY), []) \
+            .append(f.metadata["qualifier"])
     keep = None
     for fam, quals in fam_quals.items():
         cond = (F.col("family") == fam) & F.col("qualifier").isin(quals)
         keep = cond if keep is None else (keep | cond)
-    slot = None
-    for (fam, qual), k in slots.items():
-        hit = (F.col("family") == fam) & (F.col("qualifier") == qual)
-        slot = F.when(hit, k) if slot is None else slot.when(hit, k)
 
-    rows = (
+    cells = (
         as_of(changelog, ts).filter(keep)
-        .select("row_key", slot.alias("__i"),
-                F.struct("cell_ts", "value").alias("__s"))
+        .select("row_key", F.concat_ws(":", "family", "qualifier").alias("cell"),
+                "value", "cell_ts")
+        .repartition("row_key")
+    )
+    # both lists see the same rows in the same order; collect_list skips
+    # NULLs, so a SQL NULL value travels wrapped in a struct
+    names, values = F.collect_list("cell"), F.collect_list(F.struct("value"))
+    rows = (
+        latest_cells(cells, key_cols=("row_key", "cell"))
         .groupBy("row_key")
-        .agg(*[F.max(F.when(F.col("__i") == k, F.col("__s"))).alias(f"__c{k}")
-               for k in slots.values()])
+        .agg(*[F.get(values, F.array_position(names, c) - 1)["value"].alias(name)
+               for c, name in slots.items()])
     )
 
     out: list[Column] = []
@@ -282,7 +295,7 @@ def snapshot_as_of(
         if f.metadata.get("key"):
             out.append(F.col("row_key").alias(KEY_COLUMN))
             continue
-        raw = F.col(f"__c{slots[cell(f)]}.value")
+        raw = F.col(slots[cell(f)])
         if f.metadata.get("status"):
             out.append(raw.alias(STATUS_COLUMN))
         else:

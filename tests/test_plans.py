@@ -76,9 +76,9 @@ def test_snapshot_time_range_pushed_to_scan(spark, sf_dir):
 
 
 def test_snapshot_is_one_shuffle(spark, sf_dir):
-    """Latest cell and row layout are one row_key aggregation: a single
-    exchange, hashed on row_key, after the map-side partial has folded
-    every cell of a key into one row (see operators.snapshot docstring)."""
+    """Latest cell and row layout share one exchange, hashed on row_key:
+    both aggregations are keyed by row_key, so its partitioning serves
+    them (see operators.snapshot docstring)."""
     plan = explain(spark, "snapshot_events_wide", sf_dir)
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert exchange_args(plan)[0].startswith("hashpartitioning(row_key#")
@@ -195,7 +195,7 @@ def test_sample_split_shuffle_inventory(spark, sf_dir):
 def test_schema_history_snapshot_one_shuffle(spark, sf_dir):
     """The full schema pipeline keeps the flagship's one-exchange shape:
     schema resolution is driver-side (one tiny TakeOrdered job), the
-    data path is one row_key aggregation of the latest cells."""
+    data path is one shuffle on row_key."""
     plan = explain(spark, "schema_history_snapshot", sf_dir)
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert exchange_args(plan)[0].startswith("hashpartitioning(row_key#")

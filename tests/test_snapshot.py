@@ -141,15 +141,14 @@ def test_latest_per_key(spark):
 def test_snapshot_plan_is_one_shuffle(changelog, schema_history):
     schema = schema_as_of(schema_history, T2)
     plan = snapshot_as_of(changelog, schema, T2)._jdf.queryExecution().executedPlan().toString()
-    # latest cell and row layout are one row_key aggregation whose
-    # map-side partial folds a key's cells into one row before the only
-    # shuffle (see operator docstring)
+    # latest cell and row layout share the only shuffle, on row_key
+    # (see operator docstring)
     assert plan.count("Exchange") == 1
     assert "Exchange hashpartitioning(row_key#" in plan
 
 
 def test_snapshot_equals_latest_cells_row_assembly(spark):
-    """``snapshot_as_of`` (one row_key aggregation) equals the latest
+    """``snapshot_as_of`` (one shuffle on row_key) equals the latest
     cells laid out row by row in Python: equal-ts versions keep the
     larger value, sentinels and SQL NULLs decode to NULL, a second
     family binds its own cell, unbound cells and an unlogged schema
