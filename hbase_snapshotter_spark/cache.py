@@ -72,12 +72,6 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted/checkpointed handle for release."""
-    _SCOPES.setdefault(_current, []).append(df)
-    return df
-
-
 def release_scope(name: str) -> int:
     """Unpersist every handle of one scope; returns how many.
 

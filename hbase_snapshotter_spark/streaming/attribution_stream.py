@@ -5,82 +5,38 @@ specialized to credit assignment.
 Attribution is session-internal (a conversion's touches live in ITS
 session) and its per-channel output is SUM-DECOMPOSABLE across
 sessions (each conversion belongs to exactly one session; counts and
-micro-credits add).  So the N98 machinery carries it unchanged: buffer
-events for open sessions only, and the moment the watermark proves a
-session closed, run :func:`~.operators.timeseries.session_attribution`
-over that batch of closed sessions and append the per-(rule, channel)
-rows.  The running total is a sum-group over the appended rows — and
-streamed totals (plus the leftover open buffer's attribution) equal
-the batch form over all events BIT FOR BIT, which the pytest pins.
+micro-credits add).  So the N98 machinery carries it unchanged: run
+:func:`~.streaming.funnel_stream.funnel_step` with a
+:func:`~.operators.timeseries.session_attribution` closure as its
+closed-session function (``state_col`` = the event-type column), and
+each batch appends the per-(rule, channel) rows of the sessions the
+watermark just closed under ``matches``.  The running total
+(:func:`attribution_totals`) is a sum-group over the appended rows —
+and streamed totals (plus the leftover open buffer's attribution)
+equal the batch form over all events BIT FOR BIT, which the pytest
+pins.
 
-State/exactly-once discipline is inherited from the funnel maintainer
-(full open buffer + one-row meta per batch dir, ``_DONE`` last,
-re-delivery guard, N78 retention with match-row compaction)."""
+State/exactly-once discipline is the funnel step's (full open buffer +
+one-row meta per batch dir, ``_DONE`` last, re-delivery guard, N78
+retention with match-row compaction)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hbase_snapshotter_spark.operators.timeseries import (
-    session_attribution,
-)
-from hbase_snapshotter_spark.streaming.funnel_stream import (
-    FunnelStateMaintainer,
-)
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
 
-class AttributionStateMaintainer(FunnelStateMaintainer):
-    """foreachBatch sink crediting conversions in watermark-closed
-    sessions; per batch dir: ``open`` buffer, ``meta``, and
-    ``matches`` = that batch's per-(rule, channel) credit rows."""
-
-    def __init__(self, state_dir: str, *, key_col: str, type_col: str,
-                 ts_col: str, id_col: str, conversion_type: str,
-                 touch_types: list[str], gap_ms: int,
-                 allowed_lateness_ms: int = 0,
-                 retention: int | None = None):
-        super().__init__(
-            state_dir, key_col=key_col, state_col=type_col,
-            ts_col=ts_col, id_col=id_col, patterns=[], gap_ms=gap_ms,
-            allowed_lateness_ms=allowed_lateness_ms, retention=retention)
-        self.conversion_type = conversion_type
-        self.touch_types = touch_types
-
-    def _closed_rows(self, closed: DataFrame) -> DataFrame:
-        return session_attribution(
-            closed, key_col=self.key_col, ts_col=self.ts_col,
-            id_col=self.id_col, type_col=self.state_col,
-            conversion_type=self.conversion_type,
-            touch_types=self.touch_types, gap_ms=self.gap_ms)
-
-    def attribution(self, spark: SparkSession) -> DataFrame | None:
-        """Running per-(rule, channel) totals over every closed
-        session so far — a sum-group over the appended rows."""
-        rows = self.matches(spark)
-        if rows is None:
-            return None
-        return (rows.groupBy("rule", "channel")
-                .agg(F.sum("n_conversions").cast("long")
-                     .alias("n_conversions"),
-                     F.sum("credit_micros").cast("long")
-                     .alias("credit_micros")))
-
-
-def maintain_attribution(stream_df: DataFrame, state_dir: str, *,
-                         key_col: str, type_col: str, ts_col: str,
-                         id_col: str, conversion_type: str,
-                         touch_types: list[str], gap_ms: int,
-                         allowed_lateness_ms: int = 0,
-                         retention: int | None = None, **start_kwargs):
-    """Start the attribution query.  Returns (StreamingQuery,
-    AttributionStateMaintainer)."""
-    maintainer = AttributionStateMaintainer(
-        state_dir, key_col=key_col, type_col=type_col, ts_col=ts_col,
-        id_col=id_col, conversion_type=conversion_type,
-        touch_types=touch_types, gap_ms=gap_ms,
-        allowed_lateness_ms=allowed_lateness_ms, retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+def attribution_totals(m: StateMaintainer,
+                       spark: SparkSession) -> DataFrame | None:
+    """Running per-(rule, channel) totals over every closed session so
+    far — a sum-group over the appended rows."""
+    rows = m.history(spark, "matches")
+    if rows is None:
+        return None
+    return (rows.groupBy("rule", "channel")
+            .agg(F.sum("n_conversions").cast("long")
+                 .alias("n_conversions"),
+                 F.sum("credit_micros").cast("long")
+                 .alias("credit_micros")))

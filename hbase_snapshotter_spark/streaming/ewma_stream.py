@@ -20,15 +20,17 @@ equal.  The seed trick: the saved state enters the fold as a pseudo
 row whose value IS the saved ewma (making ``e_seed = ewma_prior``),
 and seed rows are dropped from the emitted verdicts.
 
-Exactly-once/state contract (the maintainer-family discipline):
+Exactly-once/state contract (the one batch-dir protocol of
+:class:`~.streaming.retention.StateMaintainer`):
 
-- per-batch output is keyed by batch id and written once, with a
-  ``_DONE`` marker landing after BOTH the verdict and state writes —
-  a re-delivered batch no-ops and every directory reproduces
-  byte-for-byte, and a crash mid-batch re-runs the whole batch;
-- state is a tiny per-group snapshot ``(group, last_bucket,
-  ewma_micro)`` written INTO each batch dir; recovery reads the latest
-  completed dir (no separate mutable state file to corrupt);
+- each batch dir holds ``verdict`` (the batch's smoothed buckets,
+  union-read as the verdict history) and ``state``; ``_DONE`` lands
+  after BOTH writes, so a re-delivered batch no-ops and a crash
+  mid-batch re-runs the whole batch;
+- ``state`` is a tiny per-group snapshot ``(group, last_bucket,
+  ewma_micro)``; recovery reads the newest complete dir
+  (``latest(spark, "state")``, no separate mutable state file to
+  corrupt), and retention compacts only the verdict history;
 - buckets at or before a group's ``last_bucket`` are dropped
   (re-delivery safety; genuinely late buckets are the upstream
   watermark's contract, as in the batch N59/N60 lanes).
@@ -36,63 +38,26 @@ Exactly-once/state contract (the maintainer-family discipline):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hbase_snapshotter_spark.operators.timeseries import ewma_smooth
-from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
+from hbase_snapshotter_spark.streaming.retention import (
+    StateMaintainer,
+    WriteFn,
+)
 
 
-class EwmaMonitor:
-    """foreachBatch sink advancing per-group integer EWMA state with
+def ewma_step(value_col: str, group_cols: list[str]) -> dict:
+    """Maintainer keywords advancing per-group integer EWMA state with
     each micro-batch's newly-finalized bucket rows."""
+    gc = group_cols
 
-    def __init__(self, state_dir: str, value_col: str,
-                 group_cols: list[str], retention: int | None = None):
-        from hbase_snapshotter_spark.streaming.retention import (
-            BatchDirCompactor,
-        )
-
-        self.state_dir = state_dir
-        self.value_col = value_col
-        self.group_cols = group_cols
-        # retention: batch dirs to keep live (None: no compaction).
-        # Verdicts of compacted batches stay readable from the
-        # generation; the latest per-group STATE always lives in a
-        # kept batch dir.
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=("verdict",),
-            done_subpath=os.path.join("verdict", "_DONE"),
-            retention=retention)
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _done_dirs(self) -> list[str]:
-        return self._compactor.live_done_dirs()
-
-    def verdicts(self, spark: SparkSession) -> DataFrame | None:
-        dirs = self._compactor.table_dirs("verdict")
-        return spark.read.parquet(*dirs) if dirs else None
-
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """Latest completed batch's per-group state snapshot."""
-        done = self._done_dirs()
-        if not done:
-            return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        if self._compactor.is_compacted(batch_id) \
-                or os.path.exists(os.path.join(out, "verdict", "_DONE")):
-            return  # re-delivered batch: already complete
-        gc = self.group_cols
-        prior = self.state(spark)
+    def step(m: StateMaintainer, batch: DataFrame, batch_id: int,
+             write: WriteFn) -> None:
+        prior = m.latest(batch.sparkSession, "state")
         rows = batch.select(
-            *gc, "bucket",
-            F.col(self.value_col).cast("double").alias("__v"))
+            *gc, "bucket", F.col(value_col).cast("double").alias("__v"))
         if prior is not None:
             rows = (rows.join(F.broadcast(prior), gc, "left")
                     .filter(F.col("last_bucket").isNull()
@@ -112,8 +77,7 @@ class EwmaMonitor:
                 .drop("last_bucket", "ewma_micro")
         else:
             folded = ewma_smooth(rows, group_cols=gc, value_col="__v")
-        folded.write.mode("overwrite").parquet(os.path.join(out, "verdict"))
-        folded = spark.read.parquet(os.path.join(out, "verdict"))
+        folded = write("verdict", folded)
         new_state = folded.groupBy(*gc).agg(
             F.max(F.struct(F.col("bucket").alias("b"),
                            F.round(F.col("ewma") * 1e6, 0).cast("long")
@@ -125,23 +89,6 @@ class EwmaMonitor:
             # groups silent this batch carry their state forward
             carried = prior.join(new_state.select(*gc), gc, "left_anti")
             new_state = new_state.unionByName(carried)
-        new_state.write.mode("overwrite") \
-            .parquet(os.path.join(out, "state"))
-        # the _DONE marker lands LAST: a crash between the verdict and
-        # state writes leaves the dir incomplete and the re-delivered
-        # batch re-runs the whole thing
-        with open(os.path.join(out, "verdict", "_DONE"), "w") as fh:
-            fh.write("")
-        self._compactor.compact(spark)
+        write("state", new_state)
 
-
-def maintain_ewma(stream_df: DataFrame, state_dir: str, value_col: str,
-                  group_cols: list[str], retention: int | None = None,
-                  **start_kwargs):
-    """Start the EWMA-monitoring query.  Returns (StreamingQuery,
-    EwmaMonitor)."""
-    monitor = EwmaMonitor(state_dir, value_col, group_cols,
-                          retention=retention)
-    query = start_foreach_batch(
-        stream_df, monitor.process_batch, **start_kwargs)
-    return query, monitor
+    return {"step": step, "history": ("verdict",)}

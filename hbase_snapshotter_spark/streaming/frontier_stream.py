@@ -8,14 +8,13 @@ representative) also makes the streaming form exact for ANY split of
 the rows into micro-batches in ANY order: per batch, sweep the batch
 alone (the only data-sized work — output is batch-frontier-sized),
 then advance the prior frontier state with it — :func:`frontier_apply`,
-run under the family's full-state maintainer
-(:class:`~.streaming.retention.StateMaintainer`).  The streamed chain
+run through :func:`~.streaming.retention.full_state_step`.  The streamed chain
 equals the batch-built frontier over everything seen BIT FOR BIT,
 which is what the pytest pins.
 
 State is tiny (per group, frontier-sized), so each batch dir holds the
 FULL advanced frontier and a read needs only the newest complete dir.
-Maintainer-family discipline: ``_DONE`` lands last, a re-delivered
+The one batch-dir protocol: ``_DONE`` lands last, a re-delivered
 complete or compacted batch returns before reading anything (count
 merging is NOT idempotent — the guard is the correctness line), and
 N78 retention deletes expired dirs outright (the newest state subsumes

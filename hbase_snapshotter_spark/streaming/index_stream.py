@@ -7,8 +7,8 @@ are per-document-decomposable state edits.  What production runs is
 the COMPOSITION under a stream: a feed of ``op ∈ I/U/D`` document (or
 vector) changes, applied per micro-batch so the serving index is
 always current — without re-tokenizing/re-encoding anything but the
-batch.  The generic full-state maintainer
-(:class:`~.streaming.retention.StateMaintainer`) runs it: pass an
+batch.  The one state maintainer runs it through
+:func:`~.streaming.retention.full_state_step`: pass an
 ``apply`` closure ``(prior_state | None, batch) → new full state``
 built from the batch-exact pieces; three canonical closures ship here
 (:func:`bm25_feed_apply`, :func:`pq_feed_apply`,
@@ -26,7 +26,7 @@ equals rebuilding the index over the net corpus — the pytest pins
 ``streamed chain ≡ batch index(net corpus)`` bit-for-bit, across
 deletes, updates, and re-deliveries.
 
-State discipline (the maintainer family): each batch dir holds the
+State discipline (the one batch-dir protocol): each batch dir holds the
 FULL advanced index (newest complete dir is the state — serving reads
 exactly one dir), ``_DONE`` lands last, a re-delivered complete or
 compacted batch returns before reading anything (apply is NOT

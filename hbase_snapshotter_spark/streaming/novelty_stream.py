@@ -13,20 +13,20 @@ join against the (sparse) hit set, never a corpus rescan.
         hits → left-anti verify against the seen-key state (exact)
         novel keys → seen-key state dir `batch=<id>` + OR'd into bitmap
 
-Exactly-once/state contract (the `SnapshotMaintainer` discipline):
+Exactly-once/state contract (the one batch-dir protocol of
+:class:`~.streaming.retention.StateMaintainer`):
 
-- the seen-key STATE is a set, stored as one directory per batch and
-  read as a union — a re-delivered batch recomputes novel = ∅ against
-  the state its first delivery wrote, so nothing is appended twice and
-  an empty overwrite never clobbers earlier state (empty novels skip
-  the write);
-- each batch dir is planned from the dirs existing BEFORE the write,
-  so the self-referential read-modify-write the snapshot maintainer
-  versions around cannot occur;
-- the bitmap is derived state: a restart rebuilds it from the seen
-  dirs (constructor), so a crash between state write and bitmap OR
-  never yields a false negative.  Within one run the two updates are
-  sequential in-process.
+- the seen-key STATE is a set, stored as each batch's novel keys under
+  ``batch=<id>/seen`` and read as the ``history`` union; ``_DONE``
+  lands last, so a re-delivered complete batch returns before reading
+  anything and a crash mid-batch re-runs the whole batch (an empty
+  novel set writes no ``seen`` table);
+- each batch is planned from the dirs complete BEFORE it, so the
+  self-referential read-modify-write cannot occur;
+- the bitmap is derived state held in the step closure: a fresh step
+  (restart) rebuilds it from the seen keys, so a crash between the
+  state write and the bitmap OR never yields a false negative.
+  Within one run the two updates are sequential in-process.
 
 All bitmap increments build at the SAME ``m_bits`` (sized once from
 ``expected_keys``) so they OR together; growing past the planned
@@ -36,103 +36,56 @@ is the point where production swaps in a scalable-bloom chain.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hbase_snapshotter_spark.streaming.windows import (
-    start_foreach_batch,
-)
 from hbase_snapshotter_spark.operators.bloom import (
     bloom_bits_for,
     build_bloom,
     might_contain,
 )
+from hbase_snapshotter_spark.streaming.retention import (
+    StateMaintainer,
+    WriteFn,
+)
 
 
-class NoveltyMaintainer:
-    """foreachBatch sink maintaining a seen-key set + running bloom
-    under ``state_dir``; per-batch novel keys land in
-    ``state_dir/batch=<id>``."""
+def seen_keys(m: StateMaintainer, spark: SparkSession) -> DataFrame | None:
+    """Every key reported novel so far (distinct)."""
+    seen = m.history(spark, "seen")
+    return None if seen is None else seen.distinct()
 
-    def __init__(self, state_dir: str, key_col: str, expected_keys: int,
-                 retention: int | None = None):
-        from hbase_snapshotter_spark.streaming.retention import (
-            BatchDirCompactor,
-        )
 
-        self.state_dir = state_dir
-        self.key_col = key_col
-        self.m_bits = bloom_bits_for(expected_keys)
-        # retention: batch dirs to keep live (None: no compaction).
-        # The seen-key SET is the union of the compact generation and
-        # the live dirs — novel keys are disjoint across batches by
-        # construction, so the merge is trivially lossless and the
-        # bitmap recovery is unchanged.
-        self._compactor = BatchDirCompactor(
-            state_dir, subtables=("",), done_subpath="_SUCCESS",
-            retention=retention)
-        os.makedirs(state_dir, exist_ok=True)
-        self.bitmap: bytes | None = None
+def novelty_step(key_col: str, expected_keys: int) -> dict:
+    """Maintainer keywords maintaining a seen-key set + running bloom;
+    per-batch novel keys land under ``seen``.  One step per maintainer:
+    the bitmap lives in the closure."""
+    m_bits = bloom_bits_for(expected_keys)
+    bitmap: bytes | None = None
 
-    def seen_keys(self, spark: SparkSession) -> DataFrame | None:
-        dirs = self._compactor.table_dirs("")
-        return spark.read.parquet(*dirs).distinct() if dirs else None
-
-    def _recover_bitmap(self, spark: SparkSession) -> None:
-        """Rebuild the derived bitmap from the durable seen-key state
-        (restart, or first batch of a run over pre-existing state)."""
-        seen = self.seen_keys(spark)
-        self.bitmap = (
-            build_bloom(seen, self.key_col, m_bits=self.m_bits)
-            if seen is not None
-            else bytes(self.m_bits // 8))
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if self._compactor.is_compacted(batch_id):
-            # re-delivered batch at-or-below the compaction watermark:
-            # its novel keys (if any) already live in the generation,
-            # so the probe below would find novel = ∅ anyway — skip it
-            return
-        if self.bitmap is None:
-            self._recover_bitmap(spark)
-        keys = (batch.select(self.key_col)
-                .filter(F.col(self.key_col).isNotNull()).distinct())
-        probed = keys.withColumn(
-            "__hit", might_contain(self.bitmap, self.key_col))
+    def step(m: StateMaintainer, batch: DataFrame, batch_id: int,
+             write: WriteFn) -> None:
+        nonlocal bitmap
+        seen = seen_keys(m, batch.sparkSession)
+        if bitmap is None:  # restart, or a run over pre-existing state
+            bitmap = (build_bloom(seen, key_col, m_bits=m_bits)
+                      if seen is not None else bytes(m_bits // 8))
+        keys = (batch.select(key_col)
+                .filter(F.col(key_col).isNotNull()).distinct())
+        probed = keys.withColumn("__hit", might_contain(bitmap, key_col))
         misses = probed.filter(~F.col("__hit")).drop("__hit")
-        seen = self.seen_keys(spark)
         hits = probed.filter(F.col("__hit")).drop("__hit")
-        verified = (hits.join(seen, self.key_col, "left_anti")
+        verified = (hits.join(seen, key_col, "left_anti")
                     if seen is not None else hits)
         novel = misses.unionByName(verified)
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
-        # plan reads only pre-existing dirs; empty novels skip the
-        # write so a re-delivered batch can never erase its first
-        # delivery's keys.  isEmpty is a take(1) probe — it stops at the
-        # first row instead of counting the whole batch, so the
-        # emptiness check stays O(1) at high batch rates.
+        # isEmpty is a take(1) probe — it stops at the first row instead
+        # of counting the whole batch, so the emptiness check stays O(1)
+        # at high batch rates
         if novel.isEmpty():
             return
-        novel.write.mode("overwrite").parquet(out)
-        inc = build_bloom(spark.read.parquet(out), self.key_col,
-                          m_bits=self.m_bits)
-        self.bitmap = (
-            np.frombuffer(self.bitmap, dtype=np.uint8)
-            | np.frombuffer(inc, dtype=np.uint8)).tobytes()
-        self._compactor.compact(spark)
+        inc = build_bloom(write("seen", novel), key_col, m_bits=m_bits)
+        bitmap = (np.frombuffer(bitmap, dtype=np.uint8)
+                  | np.frombuffer(inc, dtype=np.uint8)).tobytes()
 
-
-def maintain_novelty(stream_df: DataFrame, state_dir: str, key_col: str,
-                     expected_keys: int, retention: int | None = None,
-                     **start_kwargs):
-    """Start the novelty-maintenance query.  Returns (StreamingQuery,
-    NoveltyMaintainer)."""
-    maintainer = NoveltyMaintainer(state_dir, key_col, expected_keys,
-                                   retention=retention)
-    query = start_foreach_batch(
-        stream_df, maintainer.process_batch, **start_kwargs)
-    return query, maintainer
+    return {"step": step, "history": ("seen",)}

@@ -1,55 +1,75 @@
-"""Bounded state-dir retention for the foreachBatch maintainer family,
-and the family's one full-state maintainer (:class:`StateMaintainer`).
+"""The one foreachBatch state maintainer (:class:`StateMaintainer`) and
+its bounded batch-dir retention (:class:`BatchDirCompactor`).
 
-Every maintainer (:class:`StateMaintainer` and the union-read ones in
-`ewma_stream`, `drift_stream`, `freq_stream`, `funnel_stream`,
-`neardup_stream`, `novelty_stream`) writes one ``batch=<id>``
-directory per micro-batch —
-idempotent and restart-safe, but the directory COUNT grows without
-bound over months of micro-batches (every read lists and opens O(#
-batches) dirs, and small-file pressure grows with it).  This module
-applies the N40 compaction economics to batch dirs: periodically merge
-the dirs older than the retention window into ONE ``compact=<wm>``
-generation, then delete them — bounded directory count, identical
-reads.
+Every streaming state family writes one ``batch=<id>`` directory per
+micro-batch through :class:`StateMaintainer`, which owns the
+exactly-once protocol.  Layout under a maintainer root::
 
-Layout under a maintainer root::
-
-    batch=<id>/<sub>/...      live per-batch tables (unchanged)
-    compact=<wm>/<sub>/...    ONE merged generation: every completed
-                              batch id <= wm
+    batch=<id>/<sub>/...      the batch's tables, one named subdir each
+    batch=<id>/_DONE          batch complete (lands last)
+    compact=<wm>/<sub>/...    ONE merged generation of the history
+                              tables of every completed batch id <= wm
     compact=<wm>/_DONE        generation complete (lands last)
 
-Invariants:
+``process_batch`` returns at once when the batch id is compacted or its
+``_DONE`` exists, so a re-delivered batch changes no bytes.  Otherwise
+it runs the family's ``step``, which writes its tables through
+``write(sub, df)`` (returning the re-read table), lands ``_DONE``, then
+compacts.  A crash before ``_DONE`` leaves a dir that every read and
+the compactor ignore; the re-delivered batch re-runs whole and
+overwrites its tables.
+
+Two reads serve every family:
+
+- ``latest(spark, sub)``: ``sub`` of the newest complete batch dir (a
+  full state, a running summary, an open-session buffer);
+- ``history(spark, sub)``: the union of ``sub`` over the generation and
+  every complete live dir (appended verdicts, per-batch histograms,
+  seen keys).
+
+A step that writes no rows for a table may skip its write; both reads
+and the compactor skip a missing subdir.
+
+Families:
+
+- **full state** (``topk_stream.topk_apply``,
+  ``sketch_stream.sketch_apply``, ``frontier_stream.frontier_apply``,
+  ``session_stream.session_apply``, ``index_stream.bm25_feed_apply`` /
+  ``pq_feed_apply`` / ``graph_feed_apply``): ``apply(prior | None,
+  batch) -> new full state`` closures, run through
+  :func:`full_state_step`.  Each batch dir holds the whole ``state``, so
+  retention deletes expired dirs outright (no history tables: the
+  generation holds just ``_DONE``; every newer state subsumes them);
+- **union read** (``ewma_stream.ewma_step``, ``drift_stream.drift_step``,
+  ``freq_stream.heavy_hitters_step``, ``funnel_stream.funnel_step``,
+  ``novelty_stream.novelty_step``, ``neardup_stream.neardup_step``):
+  each factory returns the maintainer keywords: its ``step``, the
+  ``history`` tables retention carries into the generation and, for
+  drift, the lossless ``aggregate`` pre-merge.  Family reads beyond
+  ``latest``/``history`` are module functions next to each step.
+
+Retention applies the N40 compaction economics to batch dirs: the
+directory COUNT would otherwise grow without bound over months of
+micro-batches (every history read lists and opens O(# batches) dirs).
+Periodically the dirs older than the retention window merge into ONE
+``compact=<wm>`` generation and are deleted.  Invariants:
 
 - **Reads are unchanged**: ``table_dirs(sub)`` = the newest complete
   generation + every live completed batch dir with id > watermark —
   their union holds exactly the rows of all completed batches (an
-  optional per-subtable ``aggregate`` may pre-merge rows whose
-  consumers re-aggregate anyway, e.g. bucket-sum histograms — lossless
-  by the N58/N65 argument).
+  optional per-table ``aggregate`` may pre-merge rows whose consumers
+  re-aggregate anyway, e.g. bucket-sum histograms — lossless by the
+  N58/N65 argument).
 - **Re-delivery stays a no-op**: batch ids never repeat after the
-  compaction watermark (Spark batch ids are monotone), so maintainers
-  guard ``is_compacted(batch_id)`` exactly where they guarded the
-  per-dir done marker; a re-delivered compacted batch changes no
-  bytes.
+  compaction watermark (Spark batch ids are monotone), so
+  ``is_compacted(batch_id)`` guards exactly where ``_DONE`` did; a
+  re-delivered compacted batch changes no bytes.
 - **Crash-safe**: the generation is built in a temp dir, ``_DONE``
   lands last, and the atomic rename publishes it; old generations and
   expired batch dirs are deleted only AFTER publication, and a crash
   between publication and cleanup is healed by the next compaction
   (stale generations are swept, expired dirs sit at <= watermark and
   are ignored by every reader).
-
-Full-state maintainers hold the WHOLE advanced state in every batch
-dir, so a read touches only the newest complete dir and retention
-deletes expired dirs outright (``subtables=()``: the generation holds
-just ``_DONE``; every newer state subsumes them).  One class serves
-them all: :class:`StateMaintainer` takes an ``apply(prior | None,
-batch) -> new full state`` closure, and each state family ships its
-closure beside its docstring (``topk_stream.topk_apply``,
-``sketch_stream.sketch_apply``, ``frontier_stream.frontier_apply``,
-``session_stream.session_apply``, ``index_stream.bm25_feed_apply`` /
-``pq_feed_apply`` / ``graph_feed_apply``).
 """
 
 from __future__ import annotations
@@ -63,15 +83,14 @@ from pyspark.sql import DataFrame, SparkSession
 from hbase_snapshotter_spark.streaming.windows import start_foreach_batch
 
 ApplyFn = Callable[[DataFrame | None, DataFrame], DataFrame]
+WriteFn = Callable[[str, DataFrame], DataFrame]
+StepFn = Callable[["StateMaintainer", DataFrame, int, WriteFn], None]
 
 
 class BatchDirCompactor:
     """Retention policy over one maintainer root directory.
 
-    ``subtables``: the per-batch table sub-paths to carry into the
-    generation (``""`` means the batch dir itself IS the table).
-    ``done_subpath``: the path inside a batch dir whose existence marks
-    it complete (the maintainer's own marker convention).
+    ``subtables``: the per-batch tables to carry into the generation.
     ``retention``: live completed batch dirs to keep out of the
     generation (>= 1 so latest-state readers keep a live dir);
     ``None``/``0`` turns :meth:`compact` into a no-op.
@@ -80,8 +99,7 @@ class BatchDirCompactor:
     re-aggregate (lossless merges).
     """
 
-    def __init__(self, root: str, *, subtables: tuple[str, ...] = ("verdict",),
-                 done_subpath: str = "verdict/_DONE",
+    def __init__(self, root: str, *, subtables: tuple[str, ...] = (),
                  retention: int | None = None,
                  aggregate: dict[str, Callable[[DataFrame], DataFrame]]
                  | None = None):
@@ -89,7 +107,6 @@ class BatchDirCompactor:
             raise ValueError(f"retention must be >= 0, got {retention}")
         self.root = root
         self.subtables = tuple(subtables)
-        self.done_subpath = done_subpath
         self.retention = retention
         self.aggregate = aggregate or {}
 
@@ -117,27 +134,22 @@ class BatchDirCompactor:
     def is_compacted(self, batch_id: int) -> bool:
         return batch_id <= self.watermark()
 
-    def _sub(self, base: str, sub: str) -> str:
-        return os.path.join(base, sub) if sub else base
+    def _live_done(self) -> list[tuple[int, str]]:
+        wm = self.watermark()
+        return [(i, p) for i, p in self._entries("batch=")
+                if i > wm and os.path.exists(os.path.join(p, "_DONE"))]
 
     def live_done_dirs(self) -> list[str]:
         """Completed batch dirs past the watermark, id order."""
-        wm = self.watermark()
-        return [p for i, p in self._entries("batch=")
-                if i > wm
-                and os.path.exists(os.path.join(p, self.done_subpath))]
+        return [p for _, p in self._live_done()]
 
     def table_dirs(self, sub: str) -> list[str]:
         """Every parquet dir holding subtable ``sub``: the newest
-        generation (if it carries the subtable) + live batch dirs."""
-        dirs = []
-        gens = self._generations()
-        if gens:
-            p = self._sub(gens[-1][1], sub or "data")
-            if os.path.exists(p):
-                dirs.append(p)
-        dirs += [self._sub(d, sub) for d in self.live_done_dirs()]
-        return dirs
+        generation + live completed batch dirs (each if it has one)."""
+        bases = [p for _, p in self._generations()[-1:]]
+        bases += self.live_done_dirs()
+        return [p for p in (os.path.join(b, sub) for b in bases)
+                if os.path.exists(p)]
 
     def compact(self, spark: SparkSession) -> int:
         """Fold completed batch dirs beyond the retention window into a
@@ -158,10 +170,7 @@ class BatchDirCompactor:
             if d.startswith("__compact_tmp"):
                 shutil.rmtree(os.path.join(self.root, d),
                               ignore_errors=True)
-        done = [(i, p) for i, p in self._entries("batch=")
-                if i > wm
-                and os.path.exists(os.path.join(p, self.done_subpath))]
-        expired = done[:-self.retention]
+        expired = self._live_done()[:-self.retention]
         if not expired:
             return 0
         new_wm = expired[-1][0]
@@ -172,20 +181,17 @@ class BatchDirCompactor:
         # subtables may be empty (full-state maintainers retain by
         # deletion only) — the generation dir then holds just _DONE
         os.makedirs(tmp, exist_ok=True)
-        prev_gen = self._generations()
+        bases = [p for _, p in self._generations()[-1:] + expired]
         for sub in self.subtables:
-            srcs = []
-            if prev_gen:
-                prev = self._sub(prev_gen[-1][1], sub or "data")
-                if os.path.exists(prev):
-                    srcs.append(prev)
-            srcs += [self._sub(p, sub) for _, p in expired]
+            srcs = [p for p in (os.path.join(b, sub) for b in bases)
+                    if os.path.exists(p)]
+            if not srcs:
+                continue
             df = spark.read.parquet(*srcs)
             agg = self.aggregate.get(sub)
             if agg is not None:
                 df = agg(df)
-            df.write.mode("overwrite") \
-                .parquet(self._sub(tmp, sub or "data"))
+            df.write.mode("overwrite").parquet(os.path.join(tmp, sub))
         with open(os.path.join(tmp, "_DONE"), "w") as fh:
             fh.write("")
         final = os.path.join(self.root, f"compact={new_wm}")
@@ -203,46 +209,77 @@ class BatchDirCompactor:
 
 
 class StateMaintainer:
-    """foreachBatch sink advancing one full state with ``apply(prior |
-    None, batch)``; the advanced state lands in
-    ``state_dir/batch=<id>/state``, ``_DONE`` last."""
+    """foreachBatch sink running one family's ``step(maintainer, batch,
+    batch_id, write)`` per micro-batch under ``root/batch=<id>``,
+    ``_DONE`` last.  ``history`` names the tables retention carries into
+    the generation; ``aggregate`` is their optional lossless
+    pre-merge."""
 
-    def __init__(self, state_dir: str, apply: ApplyFn,
+    def __init__(self, root: str, step: StepFn, *,
+                 history: tuple[str, ...] = (),
+                 aggregate: dict[str, Callable[[DataFrame], DataFrame]]
+                 | None = None,
                  retention: int | None = None):
-        self.state_dir = state_dir
-        self.apply = apply
+        self.root = root
+        self.step = step
         self._compactor = BatchDirCompactor(
-            state_dir, subtables=(), done_subpath="_DONE",
-            retention=retention)
-        os.makedirs(state_dir, exist_ok=True)
+            root, subtables=history, retention=retention,
+            aggregate=aggregate)
+        os.makedirs(root, exist_ok=True)
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """The latest completed batch's full state."""
+    def latest(self, spark: SparkSession, sub: str) -> DataFrame | None:
+        """``sub`` of the newest complete batch dir."""
         done = self._compactor.live_done_dirs()
-        if not done:
+        if not done or not os.path.exists(os.path.join(done[-1], sub)):
             return None
-        return spark.read.parquet(os.path.join(done[-1], "state"))
+        return spark.read.parquet(os.path.join(done[-1], sub))
+
+    def history(self, spark: SparkSession, sub: str) -> DataFrame | None:
+        """``sub`` over the generation and every complete live dir."""
+        dirs = self._compactor.table_dirs(sub)
+        return spark.read.parquet(*dirs) if dirs else None
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        out = os.path.join(self.state_dir, f"batch={batch_id}")
+        out = os.path.join(self.root, f"batch={batch_id}")
         if self._compactor.is_compacted(batch_id) \
                 or os.path.exists(os.path.join(out, "_DONE")):
-            return  # re-delivered batch: apply must not re-run
-        new = self.apply(self.state(spark), batch)
-        new.write.mode("overwrite").parquet(os.path.join(out, "state"))
-        # _DONE lands last: a crash mid-write leaves the dir incomplete
+            return  # re-delivered batch: the step must not re-run
+
+        def write(sub: str, df: DataFrame) -> DataFrame:
+            path = os.path.join(out, sub)
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.schema(df.schema).parquet(path)
+
+        self.step(self, batch, batch_id, write)
+        # _DONE lands last: a crash mid-step leaves the dir incomplete
         # and the batch re-delivers cleanly
+        os.makedirs(out, exist_ok=True)
         with open(os.path.join(out, "_DONE"), "w") as fh:
             fh.write("")
         self._compactor.compact(spark)
 
 
-def maintain_state(stream_df: DataFrame, state_dir: str, apply: ApplyFn,
+def full_state_step(apply: ApplyFn) -> StepFn:
+    """Step for a full-state family: ``apply(prior | None, batch)``
+    advances the newest complete ``state`` table."""
+
+    def step(m: StateMaintainer, batch: DataFrame, batch_id: int,
+             write: WriteFn) -> None:
+        write("state", apply(m.latest(batch.sparkSession, "state"), batch))
+
+    return step
+
+
+def maintain_state(stream_df: DataFrame, root: str, step: StepFn, *,
+                   history: tuple[str, ...] = (),
+                   aggregate: dict[str, Callable[[DataFrame], DataFrame]]
+                   | None = None,
                    retention: int | None = None, **start_kwargs):
-    """Start a full-state maintenance query.  Returns (StreamingQuery,
+    """Start a maintenance query.  Returns (StreamingQuery,
     StateMaintainer)."""
-    maintainer = StateMaintainer(state_dir, apply, retention=retention)
+    maintainer = StateMaintainer(root, step, history=history,
+                                 aggregate=aggregate, retention=retention)
     query = start_foreach_batch(
         stream_df, maintainer.process_batch, **start_kwargs)
     return query, maintainer

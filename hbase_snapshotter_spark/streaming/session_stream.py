@@ -5,8 +5,7 @@ The streaming suite's session WINDOW (``windows.py``) aggregates each
 session's rows under a watermark; what it cannot produce is the
 CROSS-session economics over everything seen (bounce share, mean
 events/span), because closed sessions leave the state store.  :func:`session_apply`,
-run under the family's full-state maintainer
-(:class:`~.streaming.retention.StateMaintainer`), keeps the N93
+run through :func:`~.streaming.retention.full_state_step`, keeps the N93
 semantics exactly: per micro-batch, sessionize the batch alone (events-sized work), then merge the resulting session
 INTERVALS into the prior interval state
 (:func:`~.operators.timeseries.merge_session_intervals` — sessions-
@@ -17,11 +16,11 @@ ANY split of the events in ANY arrival order::
     merge(intervals(A) ∪ intervals(B)) = intervals(A ⊎ B)
 
 so the maintained state — and the economics derived from it on read,
-``session_economics(maintainer.state(spark))`` — equals
+``session_economics(maintainer.latest(spark, "state"))`` — equals
 the batch form over all delivered events BIT FOR BIT (the pytest pins
 exactly that on a shuffled split, no tolerance).
 
-Exactly-once/state contract (the maintainer-family discipline): each
+Exactly-once/state contract (the one batch-dir protocol): each
 batch dir holds the FULL merged state (a read needs only the newest
 complete dir), the ``_DONE`` marker lands last, a re-delivered complete
 or compacted batch returns before reading anything (interval-merge is

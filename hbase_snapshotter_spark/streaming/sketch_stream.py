@@ -15,13 +15,13 @@ check).
 :func:`sketch_apply` is generic over the state builder: pass
 ``quantile_state`` / ``cms_state`` (or any builder producing
 bucket-sum-mergeable ``(*merge_keys, cnt)`` rows) and the merge keys,
-and run the closure under the family's full-state maintainer
-(:class:`~.streaming.retention.StateMaintainer`).
+and run the closure through
+:func:`~.streaming.retention.full_state_step`.
 Every downstream consumer that reads these states — rank-normalize
 (N74), winsorize (N75), point estimates, PSI reference — refreshes
 continuously without a history rescan.
 
-Exactly-once/state contract (the maintainer-family discipline): each
+Exactly-once/state contract (the one batch-dir protocol): each
 batch dir holds the FULL advanced state (so a read needs only the
 newest complete dir, never a union), the ``_DONE`` marker lands last,
 a re-delivered complete or compacted batch returns before reading

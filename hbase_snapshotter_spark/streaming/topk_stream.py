@@ -3,8 +3,8 @@
 Per micro-batch, the k×groups-row state unions with the batch and the
 top-k is re-taken (:func:`~.operators.timeseries.advance_topk_state`,
 WindowGroupLimit map-side partial top-k); :func:`topk_apply` is that
-step as an apply closure for the family's full-state maintainer
-(:class:`~.streaming.retention.StateMaintainer`).  Two properties make
+step as an apply closure, run by the one state maintainer through
+:func:`~.streaming.retention.full_state_step`.  Two properties make
 this the LIGHTEST state in the family:
 
 - **monotone**: under insert-only streams the k-row state is

@@ -221,8 +221,10 @@ def test_novelty_maintenance_streaming_equals_batch_and_redelivers(
     exactly once (in its first-arrival file), and a full re-delivery
     run over the existing state changes nothing."""
     from hbase_snapshotter_spark.streaming.novelty_stream import (
-        maintain_novelty,
+        novelty_step,
+        seen_keys,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     src = str(tmp_path / "doc_stream")
@@ -243,27 +245,27 @@ def test_novelty_maintenance_streaming_equals_batch_and_redelivers(
 
     def run(ckpt):
         stream = replay_stream(spark, src, schema, max_files_per_trigger=1)
-        q, m = maintain_novelty(
-            stream, state, "key", expected_keys=100,
+        q, m = maintain_state(
+            stream, state, **novelty_step("key", expected_keys=100),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("ckpt1")
-    seen = {r["key"] for r in m.seen_keys(spark).collect()}
+    seen = {r["key"] for r in seen_keys(m, spark).collect()}
     assert seen == {f"k{k}" for k in range(20)}
     # each key novel exactly ONCE across all batch dirs (no dup
     # reports; r8: dirs listed through the retention compactor — same
     # dirs while nothing has been compacted)
-    all_novel = [r["key"] for d in m._compactor.table_dirs("")
+    all_novel = [r["key"] for d in m._compactor.table_dirs("seen")
                  for r in spark.read.parquet(d).collect()]
     assert sorted(all_novel) == sorted(seen)
 
     dirs_before = {d: sorted(r["key"] for r in spark.read.parquet(d).collect())
-                   for d in m._compactor.table_dirs("")}
+                   for d in m._compactor.table_dirs("seen")}
     m2 = run("ckpt2")  # full re-delivery over existing state
     dirs_after = {d: sorted(r["key"] for r in spark.read.parquet(d).collect())
-                  for d in m2._compactor.table_dirs("")}
+                  for d in m2._compactor.table_dirs("seen")}
     assert dirs_after == dirs_before
 
 
@@ -283,8 +285,10 @@ def test_neardup_maintenance_streaming_verdicts_and_redelivery(
 
     from hbase_snapshotter_spark.operators.dedup import build_neardup_state
     from hbase_snapshotter_spark.streaming.neardup_stream import (
-        maintain_neardup,
+        neardup_index,
+        neardup_step,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     batches = [
@@ -309,18 +313,17 @@ def test_neardup_maintenance_streaming_verdicts_and_redelivery(
         return s.createDataFrame(corpus_rows, "doc_id long, text string")
 
     state = str(tmp_path / "nd_state")
-    verdicts = str(tmp_path / "nd_verdicts")
 
     def run(ckpt):
         stream = replay_stream(spark, src, schema, max_files_per_trigger=1)
-        q, m = maintain_neardup(
-            stream, state, verdicts, corpus,
+        q, m = maintain_state(
+            stream, state, **neardup_step(corpus),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("ckpt1")
-    v = {r.doc_id: r for r in m.verdicts(spark).collect()}
+    v = {r.doc_id: r for r in m.history(spark, "verdict").collect()}
     assert v[1].is_novel and v[2].is_novel          # batch 0: empty history
     assert not v[3].is_novel and v[3].best_match_id == 2 \
         and v[3].best_jaccard == 1.0                # copy of doc 2
@@ -333,16 +336,16 @@ def test_neardup_maintenance_streaming_verdicts_and_redelivery(
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     edited = spark.createDataFrame([(1, "m n o p q r s t")],
                                    "doc_id long, text string")
-    assert rows(m.state(spark).filter("doc_id = 1")) == \
+    assert rows(neardup_index(m, spark).filter("doc_id = 1")) == \
         rows(build_neardup_state(edited, "doc_id"))
 
     # (r8: per-batch dirs are now listed through the retention
     # compactor — same dirs while nothing has been compacted)
     before = {d: rows(spark.read.parquet(d)) for d in
-              m._verdict_c.table_dirs("")}
+              m._compactor.table_dirs("verdict")}
     m2 = run("ckpt2")  # full re-delivery over existing state
     after = {d: rows(spark.read.parquet(d)) for d in
-             m2._verdict_c.table_dirs("")}
+             m2._compactor.table_dirs("verdict")}
     assert after == before
 
 
@@ -414,8 +417,10 @@ def test_drift_monitor_streaming_verdicts_and_redelivery(spark, tmp_path):
     from hbase_snapshotter_spark.operators.sketches import DD_LN_GAMMA
     from hbase_snapshotter_spark.streaming.drift_stream import (
         build_drift_reference,
-        maintain_drift,
+        cumulative_histogram,
+        drift_step,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     def bkt(v):
@@ -462,14 +467,15 @@ def test_drift_monitor_streaming_verdicts_and_redelivery(spark, tmp_path):
 
     def run(ckpt):
         stream = replay_stream(spark, src, schema, max_files_per_trigger=1)
-        q, m = maintain_drift(
-            stream, state, ref_dir, "v", ["grp"],
+        q, m = maintain_state(
+            stream, state, **drift_step(ref_dir, "v", ["grp"]),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("ckpt1")
-    got = {r["batch_id"]: r.asDict() for r in m.verdicts(spark).collect()}
+    got = {r["batch_id"]: r.asDict()
+           for r in m.history(spark, "verdict").collect()}
     assert set(got) == {0, 1, 2}
 
     cum = {}
@@ -489,7 +495,7 @@ def test_drift_monitor_streaming_verdicts_and_redelivery(spark, tmp_path):
 
     # cumulative histogram equals the histogram of everything seen
     ch = {r["bucket"]: r["cnt"]
-          for r in m.cumulative_histogram(spark).collect()}
+          for r in cumulative_histogram(m, spark, ["grp"]).collect()}
     assert ch == cum
 
     # (r8: per-batch verdict dirs are now listed through the retention
@@ -513,7 +519,8 @@ def test_ewma_monitor_streaming_equals_batch_and_redelivers(spark, tmp_path):
     import shutil
 
     from hbase_snapshotter_spark.operators.timeseries import ewma_smooth
-    from hbase_snapshotter_spark.streaming.ewma_stream import maintain_ewma
+    from hbase_snapshotter_spark.streaming.ewma_stream import ewma_step
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     batches = [
@@ -534,8 +541,8 @@ def test_ewma_monitor_streaming_equals_batch_and_redelivers(spark, tmp_path):
 
     def run(ckpt):
         stream = replay_stream(spark, src, schema, max_files_per_trigger=1)
-        q, m = maintain_ewma(
-            stream, state, "v", ["grp"],
+        q, m = maintain_state(
+            stream, state, **ewma_step("v", ["grp"]),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
@@ -543,7 +550,7 @@ def test_ewma_monitor_streaming_equals_batch_and_redelivers(spark, tmp_path):
     m = run("ckpt1")
     streamed = {(r["grp"], r["bucket"]): (r["ewma"], r["dev_micro"],
                                           r["is_excursion"])
-                for r in m.verdicts(spark).collect()}
+                for r in m.history(spark, "verdict").collect()}
     full = spark.createDataFrame(
         [r for b in batches for r in b], ["grp", "bucket", "v"])
     expect = {(r["grp"], r["bucket"]): (r["ewma"], r["dev_micro"],
@@ -554,14 +561,14 @@ def test_ewma_monitor_streaming_equals_batch_and_redelivers(spark, tmp_path):
 
     # h's state survived its silent batch
     st = {r["grp"]: (r["last_bucket"], r["ewma_micro"])
-          for r in m.state(spark).collect()}
+          for r in m.latest(spark, "state").collect()}
     assert st["h"][0] == 5 and st["g"][0] == 4
 
     dirs_before = {d: sorted(map(str, spark.read.parquet(
-        f"{d}/verdict").collect())) for d in m._done_dirs()}
+        f"{d}/verdict").collect())) for d in m._compactor.live_done_dirs()}
     m2 = run("ckpt2")  # full re-delivery over existing state
     dirs_after = {d: sorted(map(str, spark.read.parquet(
-        f"{d}/verdict").collect())) for d in m2._done_dirs()}
+        f"{d}/verdict").collect())) for d in m2._compactor.live_done_dirs()}
     assert dirs_after == dirs_before
 
 
@@ -574,14 +581,15 @@ def test_ewma_retention_bounds_dirs_and_preserves_reads(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.operators.timeseries import ewma_smooth
-    from hbase_snapshotter_spark.streaming.ewma_stream import EwmaMonitor
+    from hbase_snapshotter_spark.streaming.ewma_stream import ewma_step
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     N, KEEP = 24, 5
     batches = [[("g", i, float(1 + (i * 7) % 5)),
                 ("h", i, float(2 + (i * 3) % 4))] for i in range(N)]
 
     state = str(tmp_path / "ewma_ret")
-    m = EwmaMonitor(state, "v", ["grp"], retention=KEEP)
+    m = StateMaintainer(state, **ewma_step("v", ["grp"]), retention=KEEP)
     for i, rows in enumerate(batches):
         m.process_batch(
             spark.createDataFrame(rows, ["grp", "bucket", "v"]), i)
@@ -596,14 +604,15 @@ def test_ewma_retention_bounds_dirs_and_preserves_reads(spark, tmp_path):
     # reads unchanged: every batch's verdicts present exactly once,
     # and the chain equals the batch fold over the full grid
     streamed = {(r["grp"], r["bucket"]): (r["ewma"], r["is_excursion"])
-                for r in m.verdicts(spark).collect()}
+                for r in m.history(spark, "verdict").collect()}
     full = spark.createDataFrame(
         [r for b in batches for r in b], ["grp", "bucket", "v"])
     expect = {(r["grp"], r["bucket"]): (r["ewma"], r["is_excursion"])
               for r in ewma_smooth(full, group_cols=["grp"],
                                    value_col="v").collect()}
     assert streamed == expect
-    assert m.verdicts(spark).count() == 2 * N  # no dup rows from compaction
+    # no dup rows from compaction
+    assert m.history(spark, "verdict").count() == 2 * N
 
     # re-delivery of a compacted batch id: watermark no-op, zero new dirs
     wm = m._compactor.watermark()
@@ -613,12 +622,12 @@ def test_ewma_retention_bounds_dirs_and_preserves_reads(spark, tmp_path):
         spark.createDataFrame(batches[0], ["grp", "bucket", "v"]), 0)
     assert sorted(os.listdir(state)) == before
     assert {(r["grp"], r["bucket"]): (r["ewma"], r["is_excursion"])
-            for r in m.verdicts(spark).collect()} == expect
+            for r in m.history(spark, "verdict").collect()} == expect
 
     # a fresh monitor over the same dirs (restart) reads identically
-    m2 = EwmaMonitor(state, "v", ["grp"], retention=KEEP)
+    m2 = StateMaintainer(state, **ewma_step("v", ["grp"]), retention=KEEP)
     assert {(r["grp"], r["bucket"]): (r["ewma"], r["is_excursion"])
-            for r in m2.verdicts(spark).collect()} == expect
+            for r in m2.history(spark, "verdict").collect()} == expect
 
 
 def test_neardup_retention_preserves_document_wins(spark, tmp_path):
@@ -629,8 +638,10 @@ def test_neardup_retention_preserves_document_wins(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.streaming.neardup_stream import (
-        NearDupMaintainer,
+        neardup_index,
+        neardup_step,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     N, KEEP = 12, 3
     corpus_rows = [(b * 10 + j, f"doc {b} {j} text body filler")
@@ -645,9 +656,8 @@ def test_neardup_retention_preserves_document_wins(spark, tmp_path):
         ["doc_id", "text"])
 
     def run(root, retention):
-        m = NearDupMaintainer(
-            str(root / "state"), str(root / "verdict"), corpus,
-            retention=retention)
+        m = StateMaintainer(str(root), **neardup_step(corpus),
+                            retention=retention)
         for b in range(N):
             m.process_batch(
                 spark.createDataFrame(batches[b], ["doc_id", "text"]), b)
@@ -657,14 +667,14 @@ def test_neardup_retention_preserves_document_wins(spark, tmp_path):
     m_ref = run(tmp_path / "ref", None)
 
     key = lambda r: (r["doc_id"],)  # noqa: E731
-    got = sorted(map(str, m_ret.verdicts(spark).collect()))
-    ref = sorted(map(str, m_ref.verdicts(spark).collect()))
+    got = sorted(map(str, m_ret.history(spark, "verdict").collect()))
+    ref = sorted(map(str, m_ref.history(spark, "verdict").collect()))
     assert got == ref
-    got_state = sorted(map(str, m_ret.state(spark).collect()))
-    ref_state = sorted(map(str, m_ref.state(spark).collect()))
+    got_state = sorted(map(str, neardup_index(m_ret, spark).collect()))
+    ref_state = sorted(map(str, neardup_index(m_ref, spark).collect()))
     assert got_state == ref_state  # document-wins identical
 
-    sdir = str(tmp_path / "ret" / "state")
+    sdir = str(tmp_path / "ret")
     live = [d for d in os.listdir(sdir) if d.startswith("batch=")]
     assert len(live) <= KEEP + 1
 
@@ -686,8 +696,10 @@ def test_novelty_retention_bounds_dirs_and_preserves_seen_set(
     import os
 
     from hbase_snapshotter_spark.streaming.novelty_stream import (
-        NoveltyMaintainer,
+        novelty_step,
+        seen_keys,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     N, KEEP = 16, 3
     # each batch: 4 fresh keys + 2 re-sent from the previous batch
@@ -697,8 +709,8 @@ def test_novelty_retention_bounds_dirs_and_preserves_seen_set(
         for i in range(N)]
 
     def run(root, retention):
-        m = NoveltyMaintainer(str(root), "key", expected_keys=256,
-                              retention=retention)
+        m = StateMaintainer(str(root), **novelty_step(
+            "key", expected_keys=256), retention=retention)
         for i, rows in enumerate(batches):
             m.process_batch(spark.createDataFrame(rows, "key string"), i)
         return m
@@ -706,13 +718,13 @@ def test_novelty_retention_bounds_dirs_and_preserves_seen_set(
     m_ret = run(tmp_path / "ret", KEEP)
     m_ref = run(tmp_path / "ref", None)
 
-    seen_ret = sorted(r["key"] for r in m_ret.seen_keys(spark).collect())
-    seen_ref = sorted(r["key"] for r in m_ref.seen_keys(spark).collect())
+    seen_ret = sorted(r["key"] for r in seen_keys(m_ret, spark).collect())
+    seen_ref = sorted(r["key"] for r in seen_keys(m_ref, spark).collect())
     assert seen_ret == seen_ref == sorted(f"k{k}" for k in range(4 * N))
 
     # once-per-key novelty reports survive compaction (the generation
     # holds the compacted union, live dirs the rest — no dup, no loss)
-    all_novel = sorted(r["key"] for d in m_ret._compactor.table_dirs("")
+    all_novel = sorted(r["key"] for d in m_ret._compactor.table_dirs("seen")
                        for r in spark.read.parquet(d).collect())
     assert all_novel == seen_ref
 
@@ -722,12 +734,12 @@ def test_novelty_retention_bounds_dirs_and_preserves_seen_set(
 
     # restart over compacted state: bitmap recovery reads through the
     # generation; an already-seen key is NOT novel, a fresh key is
-    m2 = NoveltyMaintainer(str(tmp_path / "ret"), "key",
-                           expected_keys=256, retention=KEEP)
+    m2 = StateMaintainer(str(tmp_path / "ret"), **novelty_step(
+        "key", expected_keys=256), retention=KEEP)
     m2.process_batch(
         spark.createDataFrame([("k0",), ("fresh",)], "key string"), N)
     assert sorted(r["key"] for r in spark.read.parquet(
-        str(tmp_path / "ret" / f"batch={N}")).collect()) == ["fresh"]
+        str(tmp_path / "ret" / f"batch={N}" / "seen")).collect()) == ["fresh"]
 
     # re-delivered compacted batch id: no new dirs, nothing rewritten
     before = sorted(os.listdir(str(tmp_path / "ret")))
@@ -749,8 +761,10 @@ def test_heavy_hitters_maintenance_guarantees_and_redelivery(
     from collections import Counter
 
     from hbase_snapshotter_spark.streaming.freq_stream import (
-        maintain_heavy_hitters,
+        heavy_hitters_meta,
+        heavy_hitters_step,
     )
+    from hbase_snapshotter_spark.streaming.retention import maintain_state
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     # 4 replay files: two persistent hot items + per-file cold tails
@@ -775,8 +789,9 @@ def test_heavy_hitters_maintenance_guarantees_and_redelivery(
 
     def run(ckpt):
         stream = replay_stream(spark, src, schema, max_files_per_trigger=1)
-        q, m = maintain_heavy_hitters(
-            stream, state, "item", k=K, support_permille=SUPPORT,
+        q, m = maintain_state(
+            stream, state,
+            **heavy_hitters_step("item", k=K, support_permille=SUPPORT),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
@@ -785,18 +800,19 @@ def test_heavy_hitters_maintenance_guarantees_and_redelivery(
 
     true = Counter(t for toks in files for t in toks)
     n = sum(true.values())
-    n_state, dec = m.meta(spark)
+    n_state, dec = heavy_hitters_meta(m, spark)
     assert n_state == n
     assert dec <= n // (K + 1)
 
-    tracked = {r["item"]: r["cnt"] for r in m.state(spark).collect()}
+    tracked = {r["item"]: r["cnt"] for r in m.latest(spark, "state").collect()}
     for item, cnt in tracked.items():
         assert cnt <= true[item] <= cnt + dec, item
     for item, t in true.items():
         if item not in tracked:
             assert t <= dec, item
 
-    hit_rows = {r["item"]: r for r in m.hitters(spark).collect()}
+    hit_rows = {r["item"]: r
+                for r in m.latest(spark, "verdict").collect()}
     exact_hitters = {i for i, t in true.items() if t * 1000 >= SUPPORT * n}
     assert exact_hitters == {"hot_a", "hot_b"}
     assert exact_hitters <= set(hit_rows)          # zero false negatives
@@ -806,9 +822,9 @@ def test_heavy_hitters_maintenance_guarantees_and_redelivery(
             assert item in exact_hitters           # confirmed ⇒ true hitter
 
     # full re-delivery over existing state: byte-identical verdicts
-    before = sorted(map(str, m.verdicts(spark).collect()))
+    before = sorted(map(str, m.history(spark, "verdict").collect()))
     m2 = run("ckpt2")
-    assert sorted(map(str, m2.verdicts(spark).collect())) == before
+    assert sorted(map(str, m2.history(spark, "verdict").collect())) == before
 
 
 def test_heavy_hitters_retention_bounds_dirs(spark, tmp_path):
@@ -819,17 +835,18 @@ def test_heavy_hitters_retention_bounds_dirs(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.streaming.freq_stream import (
-        HeavyHittersMaintainer,
+        heavy_hitters_meta,
+        heavy_hitters_step,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     N, KEEP, K = 15, 3, 8
     batches = [["hot"] * 10 + [f"c{i}_{j}" for j in range(12)]
                for i in range(N)]
 
     def run(root, retention):
-        m = HeavyHittersMaintainer(str(root), "item", k=K,
-                                   support_permille=200,
-                                   retention=retention)
+        m = StateMaintainer(str(root), **heavy_hitters_step(
+            "item", k=K, support_permille=200), retention=retention)
         for i, toks in enumerate(batches):
             m.process_batch(
                 spark.createDataFrame([(t,) for t in toks], "item string"),
@@ -839,11 +856,12 @@ def test_heavy_hitters_retention_bounds_dirs(spark, tmp_path):
     m_ret = run(tmp_path / "ret", KEEP)
     m_ref = run(tmp_path / "ref", None)
 
-    assert sorted(map(str, m_ret.hitters(spark).collect())) == \
-        sorted(map(str, m_ref.hitters(spark).collect()))
-    assert sorted(map(str, m_ret.state(spark).collect())) == \
-        sorted(map(str, m_ref.state(spark).collect()))
-    assert m_ret.meta(spark) == m_ref.meta(spark)
+    assert sorted(map(str, m_ret.latest(spark, "verdict").collect())) == \
+        sorted(map(str, m_ref.latest(spark, "verdict").collect()))
+    assert sorted(map(str, m_ret.latest(spark, "state").collect())) == \
+        sorted(map(str, m_ref.latest(spark, "state").collect()))
+    assert heavy_hitters_meta(m_ret, spark) == \
+        heavy_hitters_meta(m_ref, spark)
 
     live = [d for d in os.listdir(str(tmp_path / "ret"))
             if d.startswith("batch=")]
@@ -868,7 +886,10 @@ def test_sketch_state_maintenance_streamed_equals_batch_bit_for_bit(
         cms_state,
         quantile_state,
     )
-    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.retention import (
+        full_state_step,
+        maintain_state,
+    )
     from hbase_snapshotter_spark.streaming.sketch_stream import sketch_apply
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
@@ -891,15 +912,16 @@ def test_sketch_state_maintenance_streamed_equals_batch_bit_for_bit(
             stream = replay_stream(spark, event_stream_dir, src.schema,
                                    max_files_per_trigger=1)
             q, m = maintain_state(
-                stream, state_dir, sketch_apply(builder, keys),
+                stream, state_dir,
+                full_state_step(sketch_apply(builder, keys)),
                 checkpointLocation=str(tmp_path / ckpt), availableNow=True)
             q.awaitTermination(120)
             return m
 
         m = run(f"{name}_ckpt1")
-        assert rows(m.state(spark)) == rows(batch_state), name
+        assert rows(m.latest(spark, "state")) == rows(batch_state), name
         m2 = run(f"{name}_ckpt2")  # full re-delivery: no re-application
-        assert rows(m2.state(spark)) == rows(batch_state), name
+        assert rows(m2.latest(spark, "state")) == rows(batch_state), name
 
 
 def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
@@ -910,7 +932,10 @@ def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
     import os
 
     from hbase_snapshotter_spark.operators.sketches import quantile_state
-    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
     from hbase_snapshotter_spark.streaming.sketch_stream import sketch_apply
 
     N, KEEP = 14, 3
@@ -924,8 +949,9 @@ def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
     keys = ["event_type", "bucket"]
 
     def run(root, retention):
-        m = StateMaintainer(str(root), sketch_apply(builder, keys),
-                            retention=retention)
+        m = StateMaintainer(
+            str(root), full_state_step(sketch_apply(builder, keys)),
+            retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
         return m
@@ -933,16 +959,17 @@ def test_sketch_state_retention_bounds_dirs(spark, tmp_path):
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     m_ret = run(tmp_path / "ret", KEEP)
     m_ref = run(tmp_path / "ref", None)
-    assert rows(m_ret.state(spark)) == rows(m_ref.state(spark))
+    assert rows(m_ret.latest(spark, "state")) == \
+        rows(m_ref.latest(spark, "state"))
 
     live = [d for d in os.listdir(str(tmp_path / "ret"))
             if d.startswith("batch=")]
     assert len(live) <= KEEP + 1
 
-    before_state = rows(m_ret.state(spark))
+    before_state = rows(m_ret.latest(spark, "state"))
     before_dirs = sorted(os.listdir(str(tmp_path / "ret")))
     m_ret.process_batch(batches[0], 0)  # re-delivered expired id
-    assert rows(m_ret.state(spark)) == before_state
+    assert rows(m_ret.latest(spark, "state")) == before_state
     assert sorted(os.listdir(str(tmp_path / "ret"))) == before_dirs
 
 
@@ -959,7 +986,10 @@ def test_topk_maintenance_streamed_equals_batch_and_idempotent(
         advance_topk_state,
         topk_state,
     )
-    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.retention import (
+        full_state_step,
+        maintain_state,
+    )
     from hbase_snapshotter_spark.streaming.topk_stream import topk_apply
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
@@ -975,7 +1005,7 @@ def test_topk_maintenance_streamed_equals_batch_and_idempotent(
                                max_files_per_trigger=1) \
             .filter(F.col("value").isNotNull())
         q, m = maintain_state(
-            stream, state_dir, topk_apply(**kw),
+            stream, state_dir, full_state_step(topk_apply(**kw)),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
@@ -983,14 +1013,14 @@ def test_topk_maintenance_streamed_equals_batch_and_idempotent(
     m = run("ckpt1")
     want = rows(topk_state(
         src.select("event_type", "event_id", "value"), **kw))
-    assert rows(m.state(spark)) == want
+    assert rows(m.latest(spark, "state")) == want
     m2 = run("ckpt2")  # full re-delivery through the maintainer
-    assert rows(m2.state(spark)) == want
+    assert rows(m2.latest(spark, "state")) == want
 
     # idempotence proper: re-advance the final state by a slice it
     # already contains — bit-identical, no guard involved
     readv = advance_topk_state(
-        m.state(spark),
+        m.latest(spark, "state"),
         src.select("event_type", "event_id", "value").limit(200), **kw)
     assert rows(readv) == want
 
@@ -1009,7 +1039,10 @@ def test_streamed_sessionization_equals_batch(spark, event_stream_dir,
         session_intervals,
         session_stats,
     )
-    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.retention import (
+        full_state_step,
+        maintain_state,
+    )
     from hbase_snapshotter_spark.streaming.session_stream import (
         session_apply,
     )
@@ -1030,19 +1063,19 @@ def test_streamed_sessionization_equals_batch(spark, event_stream_dir,
         stream = replay_stream(spark, event_stream_dir, src.schema,
                                max_files_per_trigger=1)
         q, m = maintain_state(
-            stream, state_dir, session_apply(
+            stream, state_dir, full_state_step(session_apply(
                 key_col="user_id", ts_col="ts", id_col="event_id",
-                gap_ms=GAP_MS),
+                gap_ms=GAP_MS)),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("sess_ckpt1")
-    assert rows(m.state(spark)) == want_state
-    assert rows(session_economics(m.state(spark))) == want_econ
+    assert rows(m.latest(spark, "state")) == want_state
+    assert rows(session_economics(m.latest(spark, "state"))) == want_econ
     m2 = run("sess_ckpt2")  # full re-delivery: merge must not re-apply
-    assert rows(m2.state(spark)) == want_state
-    assert rows(session_economics(m2.state(spark))) == want_econ
+    assert rows(m2.latest(spark, "state")) == want_state
+    assert rows(session_economics(m2.latest(spark, "state"))) == want_econ
 
 
 def test_session_state_retention_bounds_dirs(spark, tmp_path):
@@ -1051,7 +1084,10 @@ def test_session_state_retention_bounds_dirs(spark, tmp_path):
     equals the unbounded run's."""
     import os
 
-    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
     from hbase_snapshotter_spark.streaming.session_stream import (
         session_apply,
     )
@@ -1067,8 +1103,8 @@ def test_session_state_retention_bounds_dirs(spark, tmp_path):
 
     def run(root, retention):
         m = StateMaintainer(
-            str(root), session_apply(key_col="k", ts_col="ts", id_col="eid",
-                                     gap_ms=10 * 60000),
+            str(root), full_state_step(session_apply(
+                key_col="k", ts_col="ts", id_col="eid", gap_ms=10 * 60000)),
             retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
@@ -1077,13 +1113,15 @@ def test_session_state_retention_bounds_dirs(spark, tmp_path):
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     bounded = run(tmp_path / "bounded", KEEP)
     unbounded = run(tmp_path / "unbounded", None)
-    assert rows(bounded.state(spark)) == rows(unbounded.state(spark))
+    assert rows(bounded.latest(spark, "state")) == \
+        rows(unbounded.latest(spark, "state"))
     n_dirs = len([d for d in os.listdir(tmp_path / "bounded")
                   if d.startswith("batch=")])
     assert n_dirs <= KEEP + 1
     # re-delivering an expired (compacted-away) batch id is a no-op
     bounded.process_batch(batches[0], 0)
-    assert rows(bounded.state(spark)) == rows(unbounded.state(spark))
+    assert rows(bounded.latest(spark, "state")) == \
+        rows(unbounded.latest(spark, "state"))
 
 
 def test_streamed_funnel_matches_equal_batch(spark, tmp_path):
@@ -1097,8 +1135,10 @@ def test_streamed_funnel_matches_equal_batch(spark, tmp_path):
 
     from hbase_snapshotter_spark.operators.timeseries import pattern_matches
     from hbase_snapshotter_spark.streaming.funnel_stream import (
-        FunnelStateMaintainer,
+        funnel_step,
+        funnel_watermark_ms,
     )
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     GAP = 10 * 60000
     PATS = [("A", "C")]
@@ -1124,9 +1164,11 @@ def test_streamed_funnel_matches_equal_batch(spark, tmp_path):
         ).select("k", F.expr("timestamp_millis(mins * 60000)").alias("ts"),
                  "s", "eid")
 
-    m = FunnelStateMaintainer(
-        str(tmp_path / "funnel"), key_col="k", state_col="s",
-        ts_col="ts", id_col="eid", patterns=PATS, gap_ms=GAP)
+    m = StateMaintainer(str(tmp_path / "funnel"), **funnel_step(
+        lambda ev: pattern_matches(
+            ev, key_col="k", state_col="s", ts_col="ts", id_col="eid",
+            patterns=PATS, gap_ms=GAP),
+        key_col="k", state_col="s", ts_col="ts", id_col="eid", gap_ms=GAP))
     all_events = None
     for i, b in enumerate(batches):
         bdf = df_of(i, b)
@@ -1137,9 +1179,9 @@ def test_streamed_funnel_matches_equal_batch(spark, tmp_path):
     want = rows_of(pattern_matches(
         all_events, key_col="k", state_col="s", ts_col="ts", id_col="eid",
         patterns=PATS, gap_ms=GAP))
-    streamed = m.matches(spark)
+    streamed = m.history(spark, "matches")
     leftover = pattern_matches(
-        m.open_events(spark), key_col="k", state_col="s", ts_col="ts",
+        m.latest(spark, "open"), key_col="k", state_col="s", ts_col="ts",
         id_col="eid", patterns=PATS, gap_ms=GAP)
     got = rows_of(streamed.unionByName(leftover))
     assert got == want
@@ -1148,18 +1190,18 @@ def test_streamed_funnel_matches_equal_batch(spark, tmp_path):
     # re-delivery of every batch: nothing re-appends
     for i, b in enumerate(batches):
         m.process_batch(df_of(i, b), i)
-    assert rows_of(m.matches(spark)
+    assert rows_of(m.history(spark, "matches")
                    .unionByName(leftover)) == want
 
     # a below-watermark late event is dropped: replay an ancient event
     # as a NEW batch id — matches and open buffer stay unchanged
-    wm_before = m.watermark_ms(spark)
+    wm_before = funnel_watermark_ms(m, spark)
     late = df_of(9, [("u1", 1, "C")])
     m.process_batch(late, 9)
-    assert m.watermark_ms(spark) == wm_before  # monotone, no regress
-    assert rows_of(m.matches(spark).unionByName(leftover)) == want
+    assert funnel_watermark_ms(m, spark) == wm_before  # monotone, no regress
+    assert rows_of(m.history(spark, "matches").unionByName(leftover)) == want
     # and the late event never entered the open buffer
-    assert m.open_events(spark).filter("eid >= 900").count() == 0
+    assert m.latest(spark, "open").filter("eid >= 900").count() == 0
 
 
 def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
@@ -1179,7 +1221,10 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         bm25_feed_apply,
         pq_feed_apply,
     )
-    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
 
     rows_of = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
 
@@ -1195,7 +1240,8 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         spark.createDataFrame(
             [("D", 5, None), ("U", 1, "orange fox")], fs),
     ]
-    m = StateMaintainer(str(tmp_path / "bm25"), bm25_feed_apply())
+    m = StateMaintainer(str(tmp_path / "bm25"),
+                        full_state_step(bm25_feed_apply()))
     for i, f in enumerate(feeds):
         m.process_batch(f, i)
     net = spark.createDataFrame(
@@ -1203,10 +1249,12 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         "doc_id long, text string")
     want, _ = build_bm25_index(net)
     cols = ["term", "doc_id", "dl", "tf"]
-    assert rows_of(m.state(spark).select(*cols)) == rows_of(want.select(*cols))
+    assert rows_of(m.latest(spark, "state").select(*cols)) == \
+        rows_of(want.select(*cols))
     for i, f in enumerate(feeds):  # re-delivery: apply must not re-run
         m.process_batch(f, i)
-    assert rows_of(m.state(spark).select(*cols)) == rows_of(want.select(*cols))
+    assert rows_of(m.latest(spark, "state").select(*cols)) == \
+        rows_of(want.select(*cols))
 
     # ---- PQ lane (frozen codebook from the fixture corpus) ----
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1222,14 +1270,15 @@ def test_index_feed_maintainer_bm25_and_pq(spark, sf_dir, tmp_path):
         .unionByName(tag(vec(8), "I")),
         tag(vec(8), "D"),
     ]
-    mp = StateMaintainer(str(tmp_path / "pq"), pq_feed_apply(C))
+    mp = StateMaintainer(str(tmp_path / "pq"),
+                         full_state_step(pq_feed_apply(C)))
     for i, f in enumerate(pq_feeds):
         mp.process_batch(f, i)
     net_corpus = emb.filter("vec_id < 6 and vec_id not in (2, 3)") \
         .unionByName(neg(vec(2)))
     snap = lambda df: {r["vec_id"]: (list(r["__codes"]), r["__rn2"])  # noqa: E731
                        for r in df.collect()}
-    assert snap(mp.state(spark)) == snap(pq_encode(net_corpus, C))
+    assert snap(mp.latest(spark, "state")) == snap(pq_encode(net_corpus, C))
 
 
 def test_frontier_maintenance_equals_batch(spark, event_stream_dir,
@@ -1246,7 +1295,10 @@ def test_frontier_maintenance_equals_batch(spark, event_stream_dir,
     from hbase_snapshotter_spark.streaming.frontier_stream import (
         frontier_apply,
     )
-    from hbase_snapshotter_spark.streaming.retention import maintain_state
+    from hbase_snapshotter_spark.streaming.retention import (
+        full_state_step,
+        maintain_state,
+    )
     from hbase_snapshotter_spark.streaming.windows import replay_stream
 
     src = spark.read.parquet(event_stream_dir)
@@ -1264,15 +1316,15 @@ def test_frontier_maintenance_equals_batch(spark, event_stream_dir,
         stream = replay_stream(spark, event_stream_dir, src.schema,
                                max_files_per_trigger=1)
         q, m = maintain_state(
-            axes(stream), state_dir, frontier_apply(**kw),
+            axes(stream), state_dir, full_state_step(frontier_apply(**kw)),
             checkpointLocation=str(tmp_path / ckpt), availableNow=True)
         q.awaitTermination(120)
         return m
 
     m = run("ckpt1")
-    assert rows(m.state(spark)) == rows(batch_frontier)
+    assert rows(m.latest(spark, "state")) == rows(batch_frontier)
     m2 = run("ckpt2")  # full re-delivery: no re-application
-    assert rows(m2.state(spark)) == rows(batch_frontier)
+    assert rows(m2.latest(spark, "state")) == rows(batch_frontier)
 
 
 def test_attribution_maintenance_equals_batch(spark, sf_dir, tmp_path):
@@ -1290,8 +1342,10 @@ def test_attribution_maintenance_equals_batch(spark, sf_dir, tmp_path):
     )
     from hbase_snapshotter_spark.sources.changelog import read_table
     from hbase_snapshotter_spark.streaming.attribution_stream import (
-        AttributionStateMaintainer,
+        attribution_totals,
     )
+    from hbase_snapshotter_spark.streaming.funnel_stream import funnel_step
+    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
 
     GAP = 30 * 60 * 1000
     kw = dict(key_col="user_id", ts_col="ts", id_col="event_id",
@@ -1309,10 +1363,9 @@ def test_attribution_maintenance_equals_batch(spark, sf_dir, tmp_path):
         src.filter((ms >= qs[1]) & (ms < qs[2])),
         src.filter(ms >= qs[2]),
     ]
-    m = AttributionStateMaintainer(
-        str(tmp_path / "attr"), key_col="user_id", type_col="event_type",
-        ts_col="ts", id_col="event_id", conversion_type="purchase",
-        touch_types=["view", "click"], gap_ms=GAP)
+    m = StateMaintainer(str(tmp_path / "attr"), **funnel_step(
+        lambda ev: session_attribution(ev, **kw), key_col="user_id",
+        state_col="event_type", ts_col="ts", id_col="event_id", gap_ms=GAP))
     for i, b in enumerate(batches):
         m.process_batch(b, i)
 
@@ -1322,14 +1375,14 @@ def test_attribution_maintenance_equals_batch(spark, sf_dir, tmp_path):
                            F.sum("credit_micros").cast("long").alias("c"))
                       .collect())
 
-    closed_part = m.attribution(spark)
-    leftover = session_attribution(m.open_events(spark), **kw)
+    closed_part = attribution_totals(m, spark)
+    leftover = session_attribution(m.latest(spark, "open"), **kw)
     streamed = total(closed_part.unionByName(leftover))
     assert streamed == total(session_attribution(src, **kw))
     assert closed_part.count() > 0  # the watermark closed sessions
     m.process_batch(batches[1], 1)  # re-delivery: append must not re-run
-    streamed2 = total(m.attribution(spark).unionByName(
-        session_attribution(m.open_events(spark), **kw)))
+    streamed2 = total(attribution_totals(m, spark).unionByName(
+        session_attribution(m.latest(spark, "open"), **kw)))
     assert streamed2 == streamed
 
 
@@ -1343,7 +1396,10 @@ def test_frontier_retention_bounds_dirs(spark, tmp_path):
     from hbase_snapshotter_spark.streaming.frontier_stream import (
         frontier_apply,
     )
-    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
 
     N, KEEP = 12, 3
     batches = [
@@ -1356,7 +1412,7 @@ def test_frontier_retention_bounds_dirs(spark, tmp_path):
               id_col="doc_id")
 
     def run(root, retention):
-        m = StateMaintainer(str(root), frontier_apply(**kw),
+        m = StateMaintainer(str(root), full_state_step(frontier_apply(**kw)),
                             retention=retention)
         for i, b in enumerate(batches):
             m.process_batch(b, i)
@@ -1365,14 +1421,15 @@ def test_frontier_retention_bounds_dirs(spark, tmp_path):
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     m_ret = run(tmp_path / "ret", KEEP)
     m_ref = run(tmp_path / "ref", None)
-    assert rows(m_ret.state(spark)) == rows(m_ref.state(spark))
+    assert rows(m_ret.latest(spark, "state")) == \
+        rows(m_ref.latest(spark, "state"))
     live = [d for d in os.listdir(str(tmp_path / "ret"))
             if d.startswith("batch=")]
     assert len(live) <= KEEP + 1
-    before_state = rows(m_ret.state(spark))
+    before_state = rows(m_ret.latest(spark, "state"))
     before_dirs = sorted(os.listdir(str(tmp_path / "ret")))
     m_ret.process_batch(batches[0], 0)  # re-delivered expired id
-    assert rows(m_ret.state(spark)) == before_state
+    assert rows(m_ret.latest(spark, "state")) == before_state
     assert sorted(os.listdir(str(tmp_path / "ret"))) == before_dirs
 
 
@@ -1390,7 +1447,10 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
     from hbase_snapshotter_spark.streaming.index_stream import (
         graph_feed_apply,
     )
-    from hbase_snapshotter_spark.streaming.retention import StateMaintainer
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
 
     base = "alpha beta gamma delta epsilon zeta"
     fs = "op string, doc_id long, text string"
@@ -1410,7 +1470,7 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
     cap, ms = 4, 2
     m = StateMaintainer(
         str(tmp_path / "graph"),
-        graph_feed_apply(min_shared=ms, max_df=cap))
+        full_state_step(graph_feed_apply(min_shared=ms, max_df=cap)))
     for i, f in enumerate(feeds):
         m.process_batch(f, i)
 
@@ -1421,7 +1481,7 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
            (7, "common one two three p q r"),
            (10, "common one two three m n o")],
         "doc_id long, text string")
-    state = m.state(spark)
+    state = m.latest(spark, "state")
     got_sh = {(r.doc_id, r.shingle)
               for r in state.filter("kind = 'sh'").collect()}
     want_sh = {(r.doc_id, r.shingle)
@@ -1435,6 +1495,95 @@ def test_index_feed_maintainer_similarity_graph(spark, tmp_path):
     assert got_e == want_e
     for i, f in enumerate(feeds):    # re-delivery: apply must not re-run
         m.process_batch(f, i)
-    state2 = m.state(spark)
+    state2 = m.latest(spark, "state")
     assert {tuple(r) for r in state2.collect()} == \
         {tuple(r) for r in state.collect()}
+
+
+def test_partial_batch_dir_is_ignored_and_redelivery_reruns_it(
+        spark, tmp_path):
+    """The one batch-dir protocol under a crash mid-step, for a
+    multi-table union-read family (drift: ``hist`` + ``verdict``) and a
+    full-state family (sketch): the crash leaves ``batch=<id>`` holding
+    a table but no ``_DONE``; ``latest``/``history`` ignore that dir,
+    re-delivering the batch id re-runs it, and the final reads equal an
+    uninterrupted run's (bucket-sum is not idempotent, so reading the
+    partial table as prior state would show)."""
+    import os
+
+    from hbase_snapshotter_spark.operators.sketches import quantile_state
+    from hbase_snapshotter_spark.streaming.drift_stream import (
+        build_drift_reference,
+        cumulative_histogram,
+        drift_step,
+    )
+    from hbase_snapshotter_spark.streaming.retention import (
+        StateMaintainer,
+        full_state_step,
+    )
+    from hbase_snapshotter_spark.streaming.sketch_stream import sketch_apply
+
+    rows = lambda df: sorted(map(str, df.collect()))  # noqa: E731
+    ref_dir = str(tmp_path / "ref_hist")
+    build_drift_reference(
+        spark.createDataFrame([("g", v) for v in [1.0] * 30 + [2.0] * 30],
+                              ["grp", "v"]),
+        "v", ref_dir, group_cols=["grp"])
+    drift_batches = [
+        spark.createDataFrame([("g", v) for v in vals], ["grp", "v"])
+        for vals in ([1.0] * 5 + [2.0] * 5, [8.0] * 10,
+                     [1.0] * 3 + [2.0] * 3)]
+    sketch_batches = [
+        spark.createDataFrame(
+            [("g", float(1 + (7 * i + j) % 9)) for j in range(6)],
+            "event_type string, value double")
+        for i in range(3)]
+    sketch = full_state_step(sketch_apply(
+        lambda df: quantile_state(df, "value", group_cols=["event_type"]),
+        ["event_type", "bucket"]))
+
+    lanes = {
+        "drift": (lambda: drift_step(ref_dir, "v", ["grp"]), drift_batches,
+                  lambda m: (rows(m.history(spark, "verdict")),
+                             rows(m.history(spark, "hist")),
+                             rows(m.latest(spark, "verdict")),
+                             rows(cumulative_histogram(m, spark, ["grp"])))),
+        "sketch": (lambda: {"step": sketch}, sketch_batches,
+                   lambda m: rows(m.latest(spark, "state"))),
+    }
+
+    def crash_after_first_write(step):
+        def crashing(m, batch, batch_id, write):
+            def write_then_crash(sub, df):
+                write(sub, df)
+                raise RuntimeError("crash mid-step")
+            step(m, batch, batch_id, write_then_crash)
+        return crashing
+
+    for name, (family, batches, reads) in lanes.items():
+        ref = StateMaintainer(str(tmp_path / name / "ref"), **family())
+        for i, b in enumerate(batches):
+            ref.process_batch(b, i)
+
+        root = str(tmp_path / name / "crash")
+        m = StateMaintainer(root, **family())
+        for i, b in enumerate(batches[:-1]):
+            m.process_batch(b, i)
+        before = reads(m)
+        last = len(batches) - 1
+        crashing = {**family()}
+        crashing["step"] = crash_after_first_write(crashing["step"])
+        with pytest.raises(RuntimeError, match="crash mid-step"):
+            StateMaintainer(root, **crashing).process_batch(
+                batches[last], last)
+        partial = os.path.join(root, f"batch={last}")
+        assert len(os.listdir(partial)) == 1, name  # one table, no _DONE
+        assert not os.path.exists(os.path.join(partial, "_DONE")), name
+
+        # a restarted maintainer reads as if the batch never ran
+        m = StateMaintainer(root, **family())
+        assert reads(m) == before, name
+        # re-delivery re-runs the batch whole and completes it
+        m.process_batch(batches[last], last)
+        assert os.path.exists(os.path.join(partial, "_DONE")), name
+        assert reads(m) == reads(ref), name

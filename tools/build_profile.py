@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Split a query's rep wall into BUILD (Python plan construction) vs
-EXECUTE (noop save of a prebuilt frame) — the r13 session-3 lens on the
-flat tail (guide §1.2: profile before touching).  Optionally cProfile
-the build to attribute it (py4j vs Python vs analysis).
+"""Time queries with the bench methodology (noop sink, min-of-reps,
+probes off) and split each rep's wall into BUILD (Python plan
+construction) vs EXECUTE (noop save of the prebuilt frame).  Prints the
+per-rep wall (build + execute) and process-tree CPU minima next to the
+split; optionally cProfiles the build to attribute it (py4j vs Python vs
+analysis).
 
 Usage: python tools/build_profile.py [-r REPS] [--cprofile] q [q ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -36,6 +38,8 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
+    import bench as benchmod
+
     from hbase_snapshotter_spark.cache import release_caches
     from hbase_snapshotter_spark.testing import resolve, session
 
@@ -52,10 +56,11 @@ def main() -> int:
         spark.sparkContext.setJobDescription(f"warmup:{name}")
         fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
         release_caches(keep_shared=True)
-        builds, execs = [], []
+        builds, execs, walls, cpus = [], [], [], []
         prof = cProfile.Profile() if do_prof else None
         for r in range(reps):
             spark.sparkContext.setJobDescription(f"{name}:rep{r}")
+            c0 = benchmod._proc_cpu_s()
             t0 = time.time()
             if prof is not None:
                 prof.enable()
@@ -65,13 +70,19 @@ def main() -> int:
             t1 = time.time()
             df.write.mode("overwrite").format("noop").save()
             t2 = time.time()
+            cpus.append(round(max(benchmod._proc_cpu_s() - c0, 0.0), 2))
             builds.append(round(t1 - t0, 3))
             execs.append(round(t2 - t1, 3))
+            walls.append(round(t2 - t0, 3))
             release_caches(keep_shared=True)
-        out[name] = {"build": min(builds), "exec": min(execs),
+        out[name] = {"wall": min(walls), "cpu": min(cpus),
+                     "build": min(builds), "exec": min(execs),
+                     "walls": walls, "cpus": cpus,
                      "builds": builds, "execs": execs}
-        print(f"{name:35s} build {min(builds):7.3f}  exec {min(execs):7.3f}"
-              f"  builds {builds}  execs {execs}", flush=True)
+        print(f"{name:35s} wall {min(walls):7.3f}  cpu {min(cpus):8.2f}"
+              f"  build {min(builds):7.3f}  exec {min(execs):7.3f}"
+              f"  walls {walls}  builds {builds}  execs {execs}",
+              flush=True)
         if prof is not None:
             s = io.StringIO()
             ps = pstats.Stats(prof, stream=s).sort_stats("cumulative")
